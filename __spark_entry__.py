@@ -84,10 +84,10 @@ def _coverings():
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: derive points from sf0.001 lineitem, S2-encode, assign
-    level-12 tiles (pure Column bit math), spatial-join against the
-    fixture regions (broadcast interval-stab variant), aggregate per
-    (region, tile)."""
+    """Flagship: derive points from sf0.001 lineitem, spatial-join them
+    against the fixture regions (map-side interval-stab variant: encode,
+    stab and exact verify in one pass), assign level-8 tiles (pure
+    Column bit math), aggregate per (region, tile)."""
     _ensure_shipped(spark)
     sf_dir = "/root/testdata/sf0.001"
     cov_rows, params = _coverings()
@@ -281,8 +281,7 @@ def _q_vertex_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pip_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """point-in-region as a Catalyst-native bucketed broadcast hash
-    join (SURVEY §2.5b, the 100 TB fast path) — same oracle as the
-    other variants."""
+    join (SURVEY §2.5b) — same oracle as the other variants."""
     cov_rows, params = _coverings()
     cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
     return J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df, params,

@@ -200,20 +200,18 @@ def run_event_pairs_to_memory(spark: SparkSession, events_dir: str,
 def streaming_pip_counts(events: DataFrame, covering_rows: list,
                          params_by_region: dict) -> DataFrame:
     """STREAM-STATIC spatial join: streaming points against the static
-    covering table (broadcast bucketed PIP — the same plan as batch,
-    which is the point: encode UDF + bucket bit math + broadcast hash
-    join all run unchanged per micro-batch). Output: per-region event
-    counts. Works on batch DataFrames too (the stream≡batch test)."""
+    covering (map-side interval-stab PIP — the same plan as batch,
+    which is the point: the one ``mapInPandas`` pass doing encode,
+    stab and exact verify runs unchanged per micro-batch, with the
+    covering index in its closure). Output: per-region event counts.
+    Works on batch DataFrames too (the stream≡batch test)."""
     from s2spark import joins as J
 
     df = geo_events(events)
-    cov_df = J.coverings_df(df.sparkSession, covering_rows,
-                            bucket_level=8)
-    matched = J.pip_join_bucketed(
+    matched = J.pip_join_broadcast(
         df.select(F.col("event_id").alias("point_id"), "lat", "lng",
                   "value"),
-        cov_df, params_by_region, bucket_level=8,
-        extra_cols=("value",))
+        covering_rows, params_by_region, extra_cols=("value",))
     return matched.groupBy("region_id") \
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 2).alias("sum_value"))

@@ -56,11 +56,11 @@ def main() -> None:
     params = FX.region_params()
     pts = FX.points_df(spark, SF_DIR)
     sections.append((
-        "flagship: raster_vector_align (encode UDF -> bucketed broadcast "
-        "hash join -> verify UDF -> per-(region,tile) agg)",
+        "flagship: raster_vector_align (one mapInPandas encode + stab + "
+        "verify pass -> per-(region,tile) agg)",
         J.raster_vector_align(pts, cov_rows, params, level=8)))
     sections.append((
-        "pip_bucketed (the 100 TB fast path: BroadcastHashJoin on the "
+        "pip_bucketed (Catalyst-native: BroadcastHashJoin on the "
         "bucket key, BETWEEN as join residual)",
         qs["pip_bucketed"](spark, SF_DIR)))
     sections.append((

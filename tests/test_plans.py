@@ -61,6 +61,24 @@ def test_mapside_join_has_no_shuffle(spark, sf_dir, pieces):
     assert "Exchange" not in _plan(df)
 
 
+def test_raster_vector_align_single_python_pass(spark, sf_dir, pieces):
+    """the flagship runs encode + stab + verify in ONE map-side Python
+    pass: no scalar-UDF eval, no hash join against a covering table,
+    and the group-by's hash exchange is the only shuffle."""
+    cov_rows, params = pieces
+    df = J.raster_vector_align(FX.points_df(spark, sf_dir), cov_rows,
+                               params, level=8)
+    plan = _plan(df)
+    lines = plan.splitlines()
+    assert sum("MapInPandas" in ln or "MapInArrow" in ln
+               for ln in lines) == 1
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "BroadcastHashJoin"):
+        assert bad not in plan
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert "Exchange hashpartitioning(region_id" in exchanges[0]
+
+
 def test_tile_path_is_whole_stage_codegen(spark, sf_dir):
     """parent/token tiling on an existing cell-id column stays inside
     WholeStageCodegen (no Python, no shuffle)."""

@@ -86,9 +86,9 @@ def test_stateful_operator_state_survives_micro_batches(spark, sf_dir,
 
 def test_stream_static_pip_join(spark, sf_dir, tmp_path):
     """stream-static spatial join: streaming points x static covering
-    table — per-region counts from the stream must equal the batch
-    run of the SAME pipeline (encode UDF + bucket bit math + broadcast
-    hash join run unchanged per micro-batch)."""
+    covering — per-region counts from the stream must equal the batch
+    run of the SAME pipeline (the map-side encode + stab + verify pass
+    runs unchanged per micro-batch)."""
     from s2spark import fixtures as FX
     from s2spark import joins as J
 

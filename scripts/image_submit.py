@@ -7,8 +7,8 @@ codecs, PSNR >= 40 dB for lossy, phash recompute, caption equality
 rides through), geo-tiled via the S2 encode, point-in-region joined
 against the fixture regions, and aggregated per (region, tile) —
 written through the resumable manifest-checkpointed sink with
-Hilbert-clustered files, per-chunk lineage, and accumulator row
-metrics. Re-running after a kill resumes from the last committed
+Hilbert-clustered files, per-chunk lineage, and per-chunk row
+counts. Re-running after a kill resumes from the last committed
 chunk.
 
 Usage:

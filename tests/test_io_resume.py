@@ -1,5 +1,5 @@
 """Resumable checkpointed writes: kill mid-job -> resume -> identical
-final output (SURVEY.md §5.2-6); manifest lineage + metrics."""
+final output (SURVEY.md §5.2-6); manifest lineage + row-count metrics."""
 
 import os
 import tempfile
@@ -53,9 +53,15 @@ def test_resume_after_crash(spark, sf_dir, tmp_path):
     assert set(m["chunks"]) == {str(i) for i in range(N_CHUNKS)}
     total = sum(v["rows"] for v in m["chunks"].values())
     assert total == a.count()
-    assert m["accumulator_rows"] >= 0
-    for v in m["chunks"].values():
+    # the crashed call never finished, so only the resuming call's
+    # chunks (2 and 3) are in the completed-call row total
+    assert m["accumulator_rows"] == sum(c.rows for c in resumed[2:]) \
+        == m["chunks"]["2"]["rows"] + m["chunks"]["3"]["rows"]
+    for k, v in m["chunks"].items():
         assert v["files"] and v["lineage"]["num_chunks"] == N_CHUNKS
+        # footer row counts == what Spark reads back from the chunk
+        assert v["rows"] == spark.read.parquet(
+            os.path.join(out_crash, f"chunk={k}")).count()
 
 
 def test_snapshot_isolation(spark, sf_dir, tmp_path):

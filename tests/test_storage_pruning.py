@@ -10,6 +10,7 @@ asserted from the parquet footers directly)."""
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 from s2spark import columns as CC
@@ -156,3 +157,80 @@ def test_covering_scan_composes_with_pip(spark, sf_dir, tmp_path):
     # covering read touched a minority of the table's rows
     assert nonempty >= 2
     assert max(read_frac) < 0.55, read_frac
+
+
+def _raw_range(lo, hi):
+    """sortable (signed) bounds -> the uint64 cell-id range they span."""
+    return ((lo ^ SIGN) & M64, (hi ^ SIGN) & M64)
+
+
+def _sorts_in(spark, path, lo, hi):
+    """cell_sort values in [lo, hi] from a plain inferring read."""
+    return sorted(s for s in (r[IO.CELL_SORT_COL]
+                              for r in spark.read.parquet(path).collect())
+                  if lo <= s <= hi)
+
+
+@pytest.fixture(scope="module")
+def clustered_small(spark, sf_dir, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("clustered_small"))
+    IO.write_clustered(with_cell_id(FX.points_df(spark, sf_dir)), path,
+                       num_files=4)
+    return path
+
+
+def test_covering_scan_plans_without_spark_jobs(spark, clustered_small):
+    """building a covering scan over a Spark-written layout reads the
+    schema from the parquet footer: no schema-inference job before the
+    action, and the same schema as an inferring read."""
+    sorts = _sorts_in(spark, clustered_small, -SIGN, SIGN - 1)
+    lo, hi = sorts[len(sorts) // 4], sorts[len(sorts) // 2]
+
+    sc = spark.sparkContext
+    group = "s2spark-scan-build"
+    sc.setJobGroup(group, group)
+    try:
+        scan = IO.scan_cell_ranges(spark, clustered_small,
+                                   [_raw_range(lo, hi)])
+        schema = scan.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert schema == spark.read.parquet(clustered_small).schema
+
+    got = sorted(r[IO.CELL_SORT_COL] for r in scan.collect())
+    assert got == [s for s in sorts if lo <= s <= hi]
+
+
+def test_empty_covering_scans_nothing(spark, clustered_small):
+    """an empty covering matches no row: an empty DataFrame with the
+    table's schema, not a crash on `.where(None)`."""
+    scan = IO.scan_cell_ranges(spark, clustered_small, [])
+    assert scan.schema == spark.read.parquet(clustered_small).schema
+    assert scan.count() == 0
+
+
+def test_covering_scan_without_spark_footer(spark, tmp_path):
+    """files with no Spark schema in their footer (written by pyarrow),
+    and a path that is a single file, fall back to an inferring read
+    and still return exactly the rows in range."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(3)
+    ids = rng.integers(0, 2 ** 64, size=2000, dtype=np.uint64)
+    sort = np.sort((ids ^ np.uint64(SIGN)).view(np.int64))
+    d = tmp_path / "pyarrow_written"
+    d.mkdir()
+    for k, part in enumerate(np.array_split(sort, 2)):
+        pq.write_table(pa.table({IO.CELL_SORT_COL: part,
+                                 "k": np.arange(len(part)) + k * len(sort)}),
+                       str(d / f"part-{k}.parquet"))
+    lo, hi = int(sort[300]), int(sort[1200])   # spans both files
+
+    for path in (str(d), str(d / "part-0.parquet")):
+        scan = IO.scan_cell_ranges(spark, path, [_raw_range(lo, hi)])
+        got = sorted(r[IO.CELL_SORT_COL] for r in scan.collect())
+        assert got and got == _sorts_in(spark, path, lo, hi), path
+        assert scan.schema == spark.read.parquet(path).schema

@@ -367,8 +367,10 @@ def _q_region_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """exact kNN via progressive cell-neighbor rings (SURVEY §2.3 +
-    §2.5 kNN row); oracle = brute-force distances."""
+    """exact kNN via certified cell-neighbor disks (SURVEY §2.3 +
+    §2.5 kNN row): a 3-ring opening disk, then one pass-2 disk or a
+    brute-force rank for the queries it cannot certify; oracle =
+    brute-force distances."""
     return J.knn_join(spark, FX.points_df(spark, sf_dir), FX.KNN_QUERIES,
                       level=6)
 
@@ -389,23 +391,21 @@ def _q_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_knn_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     """exact kNN with the query set as a DATAFRAME (~1000 queries at
     sf0.01, derived from the point table) — the large-query-set scale
-    path (SURVEY §2.5 kNN; VERDICT r1 item 5): ring state in
-    DataFrames, per-round satisfied-query anti-join, no per-ring
-    collect. Brute-force SQL oracle."""
+    path (SURVEY §2.5 kNN; VERDICT r1 item 5): two certified disk
+    passes in DataFrames, no per-query driver state. Brute-force SQL
+    oracle."""
     pts = FX.points_df(spark, sf_dir)
     q = pts.where(F.pmod("point_id", FX.KNN_MANY_MOD) == 0) \
         .groupBy(F.col("point_id").alias("query_id")) \
         .agg(F.min("lat").alias("lat"), F.min("lng").alias("lng"))
     # level=None -> density-calibrated tile level (perf-only; the
-    # ring certification is exact at any level). r6 (VERDICT r5
-    # item 1): ring 1 already certifies 9790/9797 queries at sf0.1,
-    # so the r5 3-ring opening ranked 5.6x the candidates to save a
-    # round only ~7 stragglers needed — open with ONE ring and send
-    # the stragglers straight to the proven-kth-bound fallback
-    # (max_rounds=1): covering-disk equi-join for >=k-candidate
-    # queries, broadcast brute-force rank for the rest. Output is
-    # bit-identical (oracle + equality-vs-ring-growth test); measured
-    # 9.5 s -> ~6 s at sf0.1 / local[32].
+    # disk certification is exact at any level). r6 (VERDICT r5
+    # item 1): a ONE-ring opening disk already certifies 9790/9797
+    # queries at sf0.1, so a 3-ring opening would rank 5.6x the
+    # candidates for the sake of ~7 stragglers; pass 2 resolves those
+    # (proven-kth-bound disk for >=k-candidate queries, escalation
+    # disk, broadcast brute-force rank for the rest). max_rounds=1
+    # caps the opening disk at one ring.
     return J.knn_join_df(pts, q, level=None, k=FX.KNN_MANY_K,
                          max_rounds=1, init_rings=1)
 

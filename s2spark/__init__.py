@@ -11,7 +11,7 @@ cell-neighbor expansion), re-expressed Spark-first:
   range / level / token as pure Catalyst expressions (JVM codegen);
 - joins (``s2spark.joins``) — point-in-region as broadcast /
   salted-shuffle equi-joins over covering cells + exact verify,
-  kNN via progressive neighbor rings;
+  kNN via certified neighbor disks;
 - coverer (``s2spark.coverer``) — RegionCoverer best-first search.
 
 Reference semantics: sphere.py of s2sphere (see SURVEY.md §2 for the

@@ -281,7 +281,7 @@ KNN_QUERIES = [
     (1, 40.713, -74.006, 5),
     (2, 51.507, -0.128, 1),
     (3, -33.869, 151.209, 10),
-    (4, 0.412, -140.317, 25),    # mid-Pacific: forces ring growth
+    (4, 0.412, -140.317, 25),    # mid-Pacific: sparse, wide disk
     (5, 83.1, 11.4, 5),          # near-pole
     (6, 10.2, 179.8, 5),         # seam
     (7, -62.5, -58.3, 50),       # Antarctic

@@ -406,28 +406,30 @@ def cell_containment_join(cells: DataFrame, container: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# kNN via progressive neighbor rings (SURVEY.md §2.5 row kNN)
+# kNN via certified covering disks (SURVEY.md §2.3 / §2.5 row kNN)
 # ---------------------------------------------------------------------------
 
-FB_RING_CAP = 32   # max rings a bounded kNN-fallback straggler may
-#                    expand to ((2·32+1)² ≈ 4.2k tiles per query);
-#                    wider proven bounds take the all-tiles path
+FB_RING_CAP = 32   # max rings a pass-2 disk may span ((2·32+1)² ≈ 4.2k
+#                    tiles per query); wider proven bounds escalate, and
+#                    what still fails to certify is brute-forced
 
-LAST_KNN_FALLBACK: dict | None = None   # which fallback arms the most
-#                    recent knn_join_df run took (None: no fallback) —
-#                    test observability, set from already-computed
-#                    isEmpty probes at no extra cost
+LAST_KNN_FALLBACK: dict | None = None   # pass-2 arms of the most recent
+#                    knn_join_df call, for tests: reset to None on entry
+#                    and set only by the pass-2 probe when pass 1 left
+#                    stragglers. "bounded": some straggler had a proven
+#                    k-th bound; "unbounded": some straggler took the
+#                    brute-force arm. Read from the probe the pass already
+#                    runs — no extra Spark job
 
 
 def knn_auto_level(n_points: int, k_max: int) -> int:
     """ring level from global density: aim for ~k_max/2 points per
     cell. Exactness never depends on the level — only work does: the
-    round-1 over-fetch is |disk| ≈ 9·ppt candidates per query, so a
-    FINER grid (fewer points per tile, occasionally one more ring
-    round) beats a coarse one — measured at 600k pts / 9.8k queries /
-    k=3: level 6 (ppt≈35) 19.6 s, level 7 12.0 s, level 8 (ppt≈2.4,
-    3 rounds) 9.2 s. The r1 4·k_max calibration optimized round
-    count; candidate volume is what actually costs."""
+    pass-1 over-fetch is |disk| ≈ 9·ppt candidates per query, so a
+    FINER grid (fewer points per tile, a few more pass-2 stragglers)
+    beats a coarse one — measured at 600k pts / 9.8k queries / k=3:
+    level 6 (ppt≈35) 19.6 s, level 7 12.0 s, level 8 (ppt≈2.4) 9.2 s.
+    Candidate volume is what costs."""
     density = max(n_points, 1) / (4.0 * np.pi)  # points per steradian
     target_area = max(k_max, 1) / 2.0 / density
     return max(2, min(18, metrics.AVG_AREA.get_max_level(target_area)))
@@ -438,12 +440,11 @@ def knn_join(spark: SparkSession, points: DataFrame,
              level: int | None = 6, max_rings: int = 64) -> DataFrame:
     """exact k nearest points per query — small-list convenience API.
 
-    Thin shim over :func:`knn_join_df` (VERDICT r2 item 5: one ring
-    implementation, no per-ring driver ``collect()``): the query list
-    becomes a 4-column DataFrame (query_id, lat, lng, k) and the
-    DataFrame path does the certified ring growth, honoring the
-    per-query ``k`` column. Output: (query_id, point_id, rnk) with
-    (dist2, point_id) ties — identical contract and oracle as before.
+    Thin shim over :func:`knn_join_df`: the query list becomes a
+    4-column DataFrame (query_id, lat, lng, k) and the DataFrame path
+    ranks it, honoring the per-query ``k`` column. ``max_rings`` caps
+    the opening disk. Output: (query_id, point_id, rnk) with
+    (dist2, point_id) ties.
     """
     if level is None:
         level = knn_auto_level(points.count(),
@@ -452,12 +453,9 @@ def knn_join(spark: SparkSession, points: DataFrame,
         [(int(qid), float(la), float(ln), int(k))
          for qid, la, ln, k in queries],
         "query_id long, lat double, lng double, k int")
-    # small query set -> driver-ROUND latency dominates, so open with
-    # 3 rings and certify in one round. (The DataFrame path's default
-    # stays init_rings=1, but since the r4 exponential-growth +
-    # certified-emission restructure a 3-ring opening also wins for
-    # large query sets — r5 measured 8.25s -> 7.32s at 6k queries x
-    # 600k points; the old ~5x-wall warning predates the restructure)
+    # a small query set pays driver latency, not candidate volume: open
+    # with 3 rings so pass 1 usually certifies every query (r5 measured
+    # 3 rings faster than 1 even at 6k queries x 600k points)
     return knn_join_df(points, q, level=level, max_rounds=max_rings,
                        init_rings=3)
 
@@ -465,65 +463,55 @@ def knn_join(spark: SparkSession, points: DataFrame,
 def knn_join_df(points: DataFrame, queries: DataFrame,
                 level: int | None = 6, k: int = 10,
                 max_rounds: int = 16, init_rings: int = 1) -> DataFrame:
-    """exact kNN with the QUERY SET AS A DATAFRAME — the scale path
-    for large query tables (VERDICT r1 item 5): no per-query driver
-    state, no per-ring ``collect()`` of stats. Ring state lives in
-    DataFrames; each round does one neighbors-UDF + explode expansion,
-    one candidate stats pass, and one satisfied-query anti-join. The
-    driver only checks "any queries left?" per round (a scalar).
+    """exact kNN with the QUERY SET AS A DATAFRAME: two certified
+    passes, no driver loop and no per-query driver state.
 
     ``queries``: (query_id, lat, lng[, k]) — an optional per-query
-    integer ``k`` column overrides the global ``k`` argument (the
-    small-list :func:`knn_join` shim uses this). Output (query_id,
-    point_id, rnk) — ties by (dist2, point_id). Exactness: a query is
-    certified once it has >= k candidates with k-th chord² <= the safe
-    chord² of its ring radius (everything outside is provably
-    farther); rounds exhaust → remaining queries fall back to all
-    occupied tiles (brute force).
+    integer ``k`` column overrides the global ``k`` argument. Output
+    (query_id, point_id, rnk), ties by (dist2, point_id).
+
+    * **Pass 1** ranks every query's opening disk of
+      ``min(init_rings, max_rounds)`` Moore rings around its level-
+      ``level`` tile (``max_rounds`` is only that cap; 0 means the
+      query's own tile) and emits the queries it certifies: >= kq
+      candidates with k-th chord² <= chord²(rings·min_width). Every
+      point outside the disk is at least that far, so the ranking is
+      final.
+    * **Pass 2** gives each straggler one more disk. One with >= kq
+      candidates has a PROVEN bound on its true k-th distance (more
+      candidates can only lower it), so the disk covering that bound
+      holds its whole top-k: ranked and emitted unconditionally, if
+      the disk fits in ``FB_RING_CAP`` rings. Any other straggler gets
+      an escalation disk of min(max(2r, 8), FB_RING_CAP) rings and
+      must certify. The remainder is ranked against every point
+      through a broadcast of its few query rows (never a shuffle of
+      the point table). One probe action materializes both ranks and
+      reads both arm flags.
     """
-    from s2spark.udfs import s2_disk_expand_udf
-    import os as _os, time as _time
-    _dbg = _os.environ.get("S2_KNN_DEBUG")
-    _te = _time.time()
+    from pyspark.sql import Window
+
+    from s2spark.udfs import s2_cell_id, s2_disk_expand_var_udf
     global LAST_KNN_FALLBACK
     LAST_KNN_FALLBACK = None
 
-    spark = points.sparkSession
     if level is None:
         # density calibration (perf-only — output is exact at ANY
-        # level): aim for ~4k points per tile so ring 1 usually
-        # certifies; one count() of the point table
+        # level); one count() of the point table
         level = knn_auto_level(points.count(), int(k))
     pts = points if "cell_id" in points.columns else with_cell_id(points)
     pts = pts.withColumn("tile", CC.parent("cell_id", level)) \
         .select("point_id", "lat", "lng", "tile").persist()
-    min_width = metrics.MIN_WIDTH.get_value(level)
-
-    def safe_chord2(r: int) -> float:
-        theta = r * min_width
-        if theta >= np.pi:
-            return 4.0
-        s = 2.0 * np.sin(0.5 * theta)
-        return s * s
-
-    from s2spark.udfs import s2_cell_id
+    min_width = float(metrics.MIN_WIDTH.get_value(level))
     k_col = (F.col("k").cast("int") if "k" in queries.columns
              else F.lit(int(k)))
-    # encode the query coordinates in the SAME projection (r6): the
-    # old enc-then-join-back shape recomputed the query derivation
-    # twice and paid a 9.8k-row shuffle join for nothing
+    # the query tile is encoded in the same projection as the query
+    # columns: no enc-then-join-back shuffle
     q = queries.select("query_id",
                        F.col("lat").alias("qlat"),
                        F.col("lng").alias("qlng"),
                        k_col.alias("kq"),
                        CC.parent(s2_cell_id(F.col("lat"), F.col("lng")),
                                  level).alias("tile")).persist()
-
-    # no checkpoint pre-loop: lineage is one persisted join deep, and
-    # each localCheckpoint call costs real driver-side planning time
-    seen = q.select("query_id", "tile")
-    frontier = seen
-    active = q.select("query_id")
 
     @F.pandas_udf("double")
     def _chord2(qlat: pd.Series, qlng: pd.Series,
@@ -533,270 +521,103 @@ def knn_join_df(points: DataFrame, queries: DataFrame,
                                         lat.to_numpy(np.float64),
                                         lng.to_numpy(np.float64)))
 
-    from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy("dist2", "point_id")
+    disk = s2_disk_expand_var_udf(level)
+    cached = []
 
-    def _ranked(cand_tiles: DataFrame, hint: bool = True) -> DataFrame:
-        """every (query, candidate point) with chord² + per-query rank
-        — one pass per round serves BOTH the certification stats and
-        the emitted top-k of the queries that certify that round, so
-        candidate distances are never recomputed.
-
-        The (query, tile) set is explicitly BROADCAST: it is bounded
-        by |queries| x disk area (tens of rows per query), but it
-        arrives as a checkpoint-backed plan with unknown stats, so
-        without the hint Catalyst sort-merge-joins and re-shuffles the
-        ENTIRE point table every round (``hint=False`` only for the
-        rare brute-force fallback, whose tile set is all of them). The
-        projection is slimmed to (query_id, point_id, kq, dist2)
-        BEFORE the window so the rank shuffle and the round's cache
-        hold 4 narrow columns, not the full coordinate set."""
-        ct = F.broadcast(cand_tiles) if hint else cand_tiles
-        return pts.join(ct, "tile") \
-            .join(F.broadcast(q.select("query_id", "qlat", "qlng",
-                                       "kq")), "query_id") \
+    def _rank(cand: DataFrame) -> DataFrame:
+        """chord² + per-query rank + certification of (query row,
+        candidate point) rows, persisted: one pass serves the
+        pass-2 plan AND the emitted top-k. ``ok`` (per query): the
+        top-k is final — a proven disk, or >= kq candidates with k-th
+        chord² <= chord²(rings·min_width), clamped at pi (== 4.0). It
+        is a whole-partition window over the rank's own partitioning,
+        so it costs no extra shuffle. The projection is slimmed BEFORE
+        the window so the rank shuffle and the cache stay narrow."""
+        th = F.least(F.col("rings") * F.lit(min_width),
+                     F.lit(float(np.pi)))
+        bound = F.pow(F.lit(2.0) * F.sin(th / F.lit(2.0)), F.lit(2.0))
+        kth_ok = F.when(F.col("rnk") == F.col("kq"),
+                        F.col("dist2") <= bound)
+        ranked = cand \
             .withColumn("dist2", _chord2("qlat", "qlng", "lat", "lng")) \
-            .select("query_id", "point_id", "kq", "dist2") \
-            .withColumn("rnk", F.row_number().over(w))
+            .select("query_id", "point_id", "kq", "rings", "proven",
+                    "dist2") \
+            .withColumn("rnk", F.row_number().over(w)) \
+            .withColumn("ok", F.col("proven") | F.max(kth_ok).over(
+                Window.partitionBy("query_id"))) \
+            .persist()
+        cached.append(ranked)
+        return ranked
 
-    def _topk(ranked: DataFrame, only: DataFrame | None = None
-              ) -> DataFrame:
-        s = ranked if only is None else \
-            ranked.join(F.broadcast(only), "query_id", "left_semi")
-        return s.where(F.col("rnk") <= F.col("kq")) \
+    def _disk_rank(plan: DataFrame) -> DataFrame:
+        """rank the covering disk of each query row (q's columns plus
+        ``rings`` and ``proven``). The exploded (query, tile) set is
+        BROADCAST: it is tens of rows per query, but its plan carries
+        no stats, so without the hint Catalyst sort-merge-joins and
+        re-shuffles the whole point table."""
+        tiles = plan.select(
+            "query_id", "qlat", "qlng", "kq", "rings", "proven",
+            F.explode(disk(F.array("tile"), "rings")).alias("tile"))
+        return _rank(pts.join(F.broadcast(tiles), "tile"))
+
+    def _topk(ranked: DataFrame) -> DataFrame:
+        return ranked.where(F.col("ok") & (F.col("rnk") <= F.col("kq"))) \
             .select("query_id", "point_id",
                     F.col("rnk").cast("int").alias("rnk"))
 
-    def _ranked_brute(only: DataFrame | None = None) -> DataFrame:
-        """brute-force rank of a (small) query slice against EVERY
-        point: broadcast the queries, stream the point table once —
-        candidate set identical to the old crossJoin(all occupied
-        tiles) arm but without its tile `distinct` pass and without
-        the un-broadcast sort-merge join that re-shuffled the whole
-        point table (r6: 3.5 s → ~1 s on the sf0.1 straggler set)."""
-        qq = q if only is None else q.join(F.broadcast(only), "query_id")
-        cand = pts.crossJoin(
-            F.broadcast(qq.select("query_id", "qlat", "qlng", "kq")))
-        return cand \
-            .withColumn("dist2", _chord2("qlat", "qlng", "lat", "lng")) \
-            .select("query_id", "point_id", "kq", "dist2") \
-            .withColumn("rnk", F.row_number().over(w))
+    # pass 1: the opening disk, emitted for the queries it certifies
+    r0 = max(0, min(int(init_rings), int(max_rounds)))
+    ranked1 = _disk_rank(q.select("*", F.lit(r0).alias("rings"),
+                                  F.lit(False).alias("proven")))
+    out_parts = [_topk(ranked1)]
 
-    # exponential ring growth: round g expands the frontier by
-    # min(2^(g-1), 8) rings IN ONE vectorized pass (per-query tiles
-    # collect_list -> one multi-ring disk-expand UDF -> one explode; a
-    # single shuffle per round regardless of step — VERDICT r3 item 1,
-    # replacing the per-ring explode+distinct chain). A sparse-area
-    # query needing radius R is certified in O(log R) driver rounds
-    # instead of R. Exactness is untouched: `seen` stays exactly
-    # disk(center, r_cum) (expanding the outer annulus by s rings
-    # covers the full next annulus — every tile at Chebyshev distance
-    # r_cum + k, k <= s, is within k of an annulus tile), and the
-    # certification bound uses the cumulative radius r_cum. Extra
-    # candidates can never change the exact final top-k ranking, only
-    # ring tightness. Checkpoints are LAZY (eager=False): lineage still
-    # truncates, but the round's single action (`active.isEmpty()`)
-    # materializes all three — one Spark job per round, not four.
-    if _dbg:
-        print(f"[knn] setup sec={_time.time()-_te:.2f}", flush=True)
-    r = 0          # cumulative ring radius (certification bound)
-    g = 0          # driver round counter
-    certified_all = False  # last round's isEmpty said no stragglers
-    deferred = False       # last possible round: isEmpty SKIPPED, the
-    #                        fallback resolves (possibly zero)
-    #                        stragglers lazily in its own single action
-    cached = []    # per-round persisted ranked sets (released at end)
-    out_parts = [] # top-k slices, EMITTED the round a query certifies:
-    #                a certified query's seen disk never grows again,
-    #                so its ranking that round is final — later rounds
-    #                rank ONLY still-active queries instead of everyone
-    ranked = None
-    while r < max_rounds:
-        _t0 = _time.time()
-        g += 1
-        # round 1 opens with `init_rings` rings (a dense workload whose
-        # per-tile population is calibrated by `knn_auto_level` almost
-        # always certifies within 2-3 rings — paying ONE stats pass at
-        # r=3 beats two passes at r=1 and r=3); later rounds grow
-        # exponentially as before
-        step = min(init_rings if g == 1 else 2 ** (g - 1), 8,
-                   max_rounds - r)
-        r += step
-        if g == 1:
-            # each query owns exactly ONE tile pre-expansion: skip the
-            # collect_list shuffle AND the anti-join/union — the round-1
-            # disk (which includes the center) simply BECOMES `seen`
-            grown = q.select(
-                "query_id",
-                F.explode(s2_disk_expand_udf(level, step)
-                          (F.array("tile"))).alias("tile"))
-            new_tiles = grown
-            seen = grown
-            act_seen = seen
-        else:
-            grown = frontier.groupBy("query_id") \
-                .agg(F.collect_list("tile").alias("tiles")) \
-                .select("query_id",
-                        F.explode(s2_disk_expand_udf(level, step)("tiles"))
-                        .alias("tile"))
-            new_tiles = grown.join(seen, ["query_id", "tile"],
-                                   "left_anti") \
-                .localCheckpoint(eager=False)
-            seen = seen.unionAll(new_tiles).localCheckpoint(eager=False)
-            act_seen = seen.join(active, "query_id", "left_semi")
-        ranked = _ranked(act_seen).persist()
-        cached.append(ranked)
-        st = ranked.groupBy("query_id", "kq") \
-            .agg(F.count("*").alias("cnt"),
-                 F.min(F.when(F.col("rnk") == F.col("kq"),
-                              F.col("dist2"))).alias("kth"))
-        bound = float(safe_chord2(r))
-        satisfied = st.where((F.col("cnt") >= F.col("kq"))
-                             & F.col("kth").isNotNull()
-                             & (F.col("kth") <= F.lit(bound))) \
-            .select("query_id")
-        out_parts.append(_topk(ranked, satisfied))
-        # the checkpoint stays even on the last possible round:
-        # dropping it moves (and grows) the physical-planning cost
-        # into the fallback's own plan/broadcast compilation —
-        # measured 6.08 vs 5.71 s min (quiet interleaved A/B)
-        active = active.join(satisfied, "query_id", "left_anti") \
-            .localCheckpoint(eager=False)
-        if bound >= 4.0:
-            done = True
-        elif r >= max_rounds:
-            # the loop must exit after this round either way, so the
-            # per-round isEmpty action is pure driver latency: skip it
-            # (and the post-loop straggler probe) and let the fallback
-            # resolve a possibly-EMPTY straggler set lazily — for the
-            # max_rounds=1 configuration (knn_many) this folds round-1
-            # materialization, the fallback ranking and the flags
-            # probe into ONE driver action (4 actions -> 2; A/B'd)
-            done = True
-            deferred = True
-        else:
-            done = active.isEmpty()
-            certified_all = done
-        if _dbg:
-            print(f"[knn] round g={g} r={r} step={step} "
-                  f"sec={_time.time()-_t0:.2f} done={done} "
-                  f"deferred={deferred}", flush=True)
-        if done:
-            break
-        frontier = new_tiles.join(active, "query_id", "left_semi")
+    # pass 2: the straggler plan comes from the QUERY set left-joined
+    # with the pass-1 k-th rows — a query with fewer than kq candidates
+    # (even none) has no such row and must still reach the brute arm.
+    # The proven disk has ceil(theta_ub/min_width)+1 rings: outside
+    # disk(ρ) every point is farther than (ρ-1)·min_width, and the +1
+    # absorbs that and float rounding.
+    kth = ranked1.where(F.col("rnk") == F.col("kq")) \
+        .select("query_id", F.col("dist2").alias("kth"), "ok")
+    theta = 2.0 * F.asin(F.least(F.sqrt("kth") / F.lit(2.0),
+                                 F.lit(1.0)))
+    rings_b = (F.ceil(theta / F.lit(min_width)) + F.lit(1)).cast("int")
+    proven = F.col("kth").isNotNull() & (rings_b <= F.lit(FB_RING_CAP))
+    esc = int(min(max(2 * r0, 8), FB_RING_CAP))
+    stg = q.join(F.broadcast(kth), "query_id", "left") \
+        .where(~F.coalesce(F.col("ok"), F.lit(False))) \
+        .select("query_id", "qlat", "qlng", "kq", "tile",
+                F.when(proven, rings_b).otherwise(F.lit(esc))
+                .alias("rings"),
+                F.coalesce(proven, F.lit(False)).alias("proven"))
+    ranked2 = _disk_rank(stg)
+    out_parts.append(_topk(ranked2))
+    done2 = ranked2.where((F.col("rnk") == F.col("kq")) & F.col("ok")) \
+        .select("query_id")
+    # BOTH arm flags in ONE action, which also materializes both ranks:
+    # any proven straggler, and stragglers minus pass-2 certified > 0
+    # (each query has at most one k-th row). Nulls: no stragglers.
+    bounded, unbounded = stg.select(
+        F.col("proven").cast("int").alias("p"), F.lit(1).alias("n")) \
+        .unionAll(done2.select(F.lit(0).alias("p"),
+                               F.lit(-1).alias("n"))) \
+        .agg(F.max("p"), F.sum("n")).first()
+    if bounded is not None:
+        LAST_KNN_FALLBACK = {"bounded": bounded == 1,
+                             "unbounded": unbounded > 0}
+    if unbounded:
+        rem = stg.join(F.broadcast(done2), "query_id", "left_anti")
+        out_parts.append(_topk(_rank(pts.crossJoin(F.broadcast(
+            rem.select("query_id", "qlat", "qlng", "kq", "rings",
+                       F.lit(True).alias("proven")))))))
 
-    if g == 0 or (not certified_all
-                  and (deferred or not active.isEmpty())):
-        # stragglers that never certified. bound >= pi: their last
-        # ranked set already held every reachable point — emit it.
-        if g > 0 and safe_chord2(r) >= 4.0:
-            out_parts.append(_topk(ranked, active))
-        elif g == 0:
-            # max_rounds == 0 degenerate: no ring stats exist — brute
-            # force every query against every point.
-            fb = _ranked_brute().persist()
-            cached.append(fb)
-            out_parts.append(_topk(fb))
-        else:
-            # Straggler resolution in ONE var-ring pass (r6 restructure
-            # of the VERDICT r4 bounded fallback + VERDICT r5 item 7):
-            #
-            # * a straggler with >= kq candidates has a PROVEN upper
-            #   bound on its true k-th distance — its current kth
-            #   chord² can only improve with more candidates — so its
-            #   whole top-k lies inside the covering disk of
-            #   ceil(theta_ub/min_width)+1 rings (outside disk(ρ) ⇒
-            #   dist > (ρ-1)·min_width; the +1 absorbs that and float
-            #   rounding). Emitted UNCONDITIONALLY from that disk.
-            # * a straggler with < kq candidates gets one ESCALATION
-            #   disk (max(2r, 8) rings, capped) ranked in the same
-            #   pass; it emits only if it certifies (per-query bound
-            #   column, same chord formula as safe_chord2).
-            # * whatever remains — still < kq in the escalated disk,
-            #   a proven bound wider than FB_RING_CAP, or an
-            #   escalated-but-uncertified query — is brute-force
-            #   ranked against every point via a broadcast of those
-            #   few query rows (never a shuffle of the point table).
-            from s2spark.udfs import s2_disk_expand_var_udf
-            _tf = _time.time()
-            theta = 2.0 * F.asin(F.least(F.sqrt("kth") / F.lit(2.0),
-                                         F.lit(1.0)))
-            rings_b = (F.ceil(theta / F.lit(float(min_width)))
-                       + F.lit(1)).cast("int")
-            esc = int(min(max(2 * r, 8), FB_RING_CAP))
-            stg = st.join(F.broadcast(active), "query_id", "left_semi")
-            proven = F.col("kth").isNotNull() \
-                & (rings_b <= F.lit(FB_RING_CAP))
-            plan = stg.select(
-                "query_id",
-                F.when(proven, F.least(rings_b, F.lit(FB_RING_CAP)))
-                .otherwise(F.lit(esc)).alias("rings"),
-                proven.alias("proven")) \
-                .localCheckpoint(eager=False)
-            bq = q.join(F.broadcast(plan), "query_id")
-            cand = bq.select(
-                "query_id", "proven",
-                F.explode(s2_disk_expand_var_udf(level)
-                          (F.array("tile"), F.col("rings")))
-                .alias("tile"))
-            fb = _ranked(cand.drop("proven")).persist()
-            cached.append(fb)
-            # per-query certification bound for the escalated disks:
-            # chord²(rings·min_width), clamped at pi (== 4.0 exactly)
-            th_r = F.least(F.col("rings") * F.lit(float(min_width)),
-                           F.lit(float(np.pi)))
-            bound_c = F.pow(F.lit(2.0) * F.sin(th_r / F.lit(2.0)),
-                            F.lit(2.0))
-            st_fb = fb.groupBy("query_id", "kq").agg(
-                F.count("*").alias("cnt"),
-                F.min(F.when(F.col("rnk") == F.col("kq"),
-                             F.col("dist2"))).alias("kth")) \
-                .join(F.broadcast(plan), "query_id")
-            done_fb = st_fb.where(
-                F.col("proven")
-                | ((F.col("cnt") >= F.col("kq"))
-                   & F.col("kth").isNotNull()
-                   & (F.col("kth") <= bound_c))).select("query_id")
-            out_parts.append(_topk(fb, done_fb))
-            rem = active.join(F.broadcast(done_fb), "query_id",
-                              "left_anti")
-            # BOTH fallback flags in ONE action (r6): the any-proven
-            # scalar and the any-remainder scalar ride one unioned
-            # agg, so the pass costs a single driver job instead of
-            # two isEmpty probes (the job also materializes fb's
-            # persist)
-            probe = plan.select(
-                F.lit(0).alias("k"),
-                F.col("proven").cast("int").alias("v")) \
-                .unionAll(rem.select(F.lit(1).alias("k"),
-                                     F.lit(1).alias("v"))) \
-                .groupBy("k").agg(F.max("v").alias("m")).collect()
-            fl = {row["k"]: row["m"] for row in probe}
-            has_bounded = fl.get(0, 0) == 1
-            has_unb = 1 in fl
-            LAST_KNN_FALLBACK = {
-                "bounded": has_bounded, "unbounded": has_unb}
-            if _dbg:
-                print(f"[knn] fallback bounded={has_bounded} "
-                      f"unbounded={has_unb} "
-                      f"sec={_time.time()-_tf:.2f}", flush=True)
-            if has_unb:
-                fb_u = _ranked_brute(rem).persist()
-                cached.append(fb_u)
-                out_parts.append(_topk(fb_u))
-
-    # eagerly checkpoint the SMALL result (<= sum of k) so every
-    # intermediate cache can be released before returning — no persist
-    # outlives the call (ADVICE r3 cache-leak discipline). Each round's
-    # emitted slice reads that round's still-persisted ranked set.
-    _t0 = _time.time()
+    # eagerly checkpoint the SMALL result (<= sum of k rows) so every
+    # persist is released before returning — none outlives the call
     out = out_parts[0]
     for p in out_parts[1:]:
         out = out.unionAll(p)
     out = out.localCheckpoint()
-    if _dbg:
-        print(f"[knn] final checkpoint sec={_time.time()-_t0:.2f}",
-              flush=True)
     for c in cached:
         c.unpersist()
     pts.unpersist()

@@ -266,7 +266,7 @@ def get_vertex_neighbors(cell_id, lvl: int):
 
 def ring_expand(cells: np.ndarray, lvl: int) -> np.ndarray:
     """unique union of ``cells`` and their Moore neighborhoods at ``lvl``
-    — one kNN ring-growth step (semantics = repeated
+    — one Moore ring of a kNN candidate disk (semantics = repeated
     ``CellId.get_all_neighbors``; SURVEY.md §2.3)."""
     nbrs = get_all_neighbors(cells, lvl)
     return np.unique(np.concatenate([cells, nbrs.ravel()]))
@@ -275,7 +275,7 @@ def ring_expand(cells: np.ndarray, lvl: int) -> np.ndarray:
 def disk_expand_owned(owner: np.ndarray, cells: np.ndarray, lvl: int,
                       steps: int):
     """``steps`` Moore-ring expansions of many PER-OWNER cell sets in
-    one vectorized pass (the kNN multi-ring growth step, VERDICT r3
+    one vectorized pass (the kNN candidate disks, VERDICT r3
     item 1): input parallel arrays (owner int64, cell uint64); output
     the per-owner unique union of the cells and every cell within
     Chebyshev distance <= ``steps`` of them, as sorted-by-owner

@@ -4,13 +4,13 @@ Geo data is Zipfian (hot cities): a uniform salt wastes S× covering
 replication on cold buckets, while AQE can split skewed shuffle
 partitions but not a single hot *key* on a replicated build side. So:
 
-1. :func:`hot_bucket_salts` — estimate per-bucket point counts from a
-   cheap sample, return {bucket: salt_factor} for buckets above the
+1. :func:`hot_bucket_salts_df` — estimate per-bucket point counts
+   from a cheap sample, return (sb, factor) rows for buckets above the
    skew threshold (salt factor scales with the bucket's share);
 2. :func:`pip_join_salted_targeted` — the salted shuffle join with
    covering rows replicated ONLY for hot buckets (cold buckets keep a
    single salt), point salt = hash % factor per bucket;
-3. :func:`choose_pip_strategy` — picks broadcast / bucketed / salted
+3. :func:`choose_pip_plan` — picks bucketed / salted / targeted-salted
    by covering size and skew stats (the "planner-in-Python" of
    SURVEY.md §4.3: no custom Catalyst rule needed).
 """
@@ -27,48 +27,20 @@ from s2spark.joins import make_verify_udf, with_cell_id
 BROADCAST_COVERING_LIMIT = 5_000_000
 
 
-def bucket_counts(points: DataFrame, bucket_level: int,
-                  sample_fraction: float | None = 0.05) -> dict[int, int]:
-    """sampled per-bucket point counts (one cheap pass)."""
-    pts = points if "cell_id" in points.columns else with_cell_id(points)
-    if sample_fraction is not None and sample_fraction < 1.0:
-        pts = pts.sample(fraction=sample_fraction, seed=42)
-    rows = pts.groupBy(CC.parent("cell_id", bucket_level).alias("b")) \
-        .count().collect()
-    scale = 1.0 / (sample_fraction or 1.0)
-    return {r["b"]: int(r["count"] * scale) for r in rows}
-
-
-def hot_bucket_salts(counts: dict[int, int], max_salt: int = 16,
-                     skew_ratio: float = 4.0) -> dict[int, int]:
-    """salt factors for buckets holding more than ``skew_ratio``× the
-    mean bucket load; factor grows with the bucket's excess share."""
-    if not counts:
-        return {}
-    mean = sum(counts.values()) / len(counts)
-    salts = {}
-    for b, c in counts.items():
-        if c > skew_ratio * mean:
-            salts[b] = min(max_salt, max(2, round(c / mean)))
-    return salts
-
-
 def hot_bucket_salts_df(points: DataFrame, bucket_level: int,
                         sample_fraction: float | None = 0.05,
                         max_salt: int = 16,
                         skew_ratio: float = 4.0) -> DataFrame:
-    """the SCALE form of bucket_counts + hot_bucket_salts (VERDICT r5
-    item 6): the per-bucket histogram, the mean, and the salt factors
-    stay DataFrames end to end — no driver-side dict, so a deep
-    bucket level on a 100 TB table costs one sampled partial-agg
-    shuffle instead of a driver collect. Output (sb, factor) rows for
-    hot buckets only (broadcast-join it into the salted join). The
-    sampling scale factor cancels in both the ratio test and the
-    factor (c/mean), so the sampled counts are used raw; factor
-    rounding is HALF_UP here vs python banker's rounding in the dict
-    form — a perf-only difference in salt width, never in join
-    output."""
-    from s2spark.joins import with_cell_id
+    """salt factors for buckets holding more than ``skew_ratio``× the
+    mean (sampled) bucket load; the factor grows with the bucket's
+    share, clamped to [2, ``max_salt``]. The per-bucket histogram, the
+    mean, and the salt factors stay DataFrames end to end — no
+    driver-side dict, so a deep bucket level on a 100 TB table costs
+    one sampled partial-agg shuffle instead of a driver collect.
+    Output (sb, factor) rows for hot buckets only (broadcast-join it
+    into the salted join). The sampling scale factor cancels in both
+    the ratio test and the factor (c/mean), so the sampled counts are
+    used raw."""
     pts = points if "cell_id" in points.columns else with_cell_id(points)
     if sample_fraction is not None and sample_fraction < 1.0:
         pts = pts.sample(fraction=sample_fraction, seed=42)
@@ -86,23 +58,15 @@ def hot_bucket_salts_df(points: DataFrame, bucket_level: int,
 
 def pip_join_salted_targeted(points: DataFrame, cov_df: DataFrame,
                              params_by_region: dict,
-                             salt_map,
+                             salt_map: DataFrame,
                              bucket_level: int) -> DataFrame:
     """salted shuffle PIP join replicating covering rows only for hot
     buckets. ``cov_df`` from :func:`s2spark.joins.coverings_df` with
-    the same ``bucket_level``. ``salt_map`` is either the dict form
-    ({bucket: factor}) or a (sb, factor) DataFrame from
-    :func:`hot_bucket_salts_df` (the scale path — broadcast as-is,
-    nothing ever collected). Output: (region_id, point_id)."""
-    spark = points.sparkSession
-    if isinstance(salt_map, DataFrame):
-        salt_df = F.broadcast(salt_map)
-    elif salt_map:
-        salt_df = F.broadcast(spark.createDataFrame(
-            [(b, s) for b, s in salt_map.items()], "sb long, factor int"))
-    else:
-        salt_df = F.broadcast(spark.createDataFrame(
-            [(0, 1)], "sb long, factor int").limit(0))
+    the same ``bucket_level``. ``salt_map`` is a (sb, factor)
+    DataFrame from :func:`hot_bucket_salts_df`, broadcast as-is —
+    nothing is ever collected; no rows means no salting. Output:
+    (region_id, point_id)."""
+    salt_df = F.broadcast(salt_map)
 
     pts = points if "cell_id" in points.columns else with_cell_id(points)
     pts = pts.withColumn("bucket", CC.parent("cell_id", bucket_level)) \
@@ -131,31 +95,21 @@ def pip_join_salted_targeted(points: DataFrame, cov_df: DataFrame,
         .select("region_id", pts["point_id"])
 
 
-def choose_pip_strategy(n_exploded_covering: int,
-                        salt_map: dict[int, int]) -> str:
-    """'bucketed' (broadcast hash) when the covering fits a broadcast;
-    'salted' shuffle otherwise; targeted salting whenever hot buckets
-    exist on the shuffle path."""
-    if n_exploded_covering <= BROADCAST_COVERING_LIMIT:
-        return "bucketed"
-    return "salted_targeted" if salt_map else "salted"
-
-
 def choose_pip_plan(points: DataFrame, n_exploded_covering: int,
                     bucket_level: int,
                     sample_fraction: float | None = 0.05
-                    ) -> tuple[str, dict[int, int]]:
+                    ) -> tuple[str, DataFrame | None]:
     """strategy + salt map in one call, running the sampled skew probe
     ONLY when the covering cannot broadcast (r6, guide §1.2): on the
     broadcast-hash path the probe is pure cost — point skew cannot
     change the choice, because a broadcast join has no shuffle to
     salt. Identical decisions to probing first, one fewer pass over
     the point table on the common path. On the shuffle path the salt
-    map is the DataFrame form (:func:`hot_bucket_salts_df`) — no
-    driver dict on the scale path (VERDICT r5 item 6); the only
-    driver value is the tiny any-hot probe."""
+    map is the DataFrame form (:func:`hot_bucket_salts_df`; None on
+    the broadcast path) — no driver dict (VERDICT r5 item 6); the
+    only driver value is the tiny any-hot probe."""
     if n_exploded_covering <= BROADCAST_COVERING_LIMIT:
-        return "bucketed", {}
+        return "bucketed", None
     hot = hot_bucket_salts_df(points, bucket_level,
                               sample_fraction).persist()
     return ("salted" if hot.isEmpty() else "salted_targeted"), hot

@@ -952,10 +952,6 @@ def _components(docs: DataFrame, pairs: DataFrame,
     rounds instead of O(diameter) — a 10⁶-long dup chain converges in
     ~20 rounds. Raises if ``max_iters`` rounds end without a
     fixed point rather than silently returning partial labels."""
-    import os as _os
-    import time as _time
-    _dbg = _os.environ.get("S2_CC_DEBUG")
-    _t0 = _time.time()
     e = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
     # edges checkpoint LAZILY (r6): several rounds re-read them, but
     # an eager checkpoint is a whole extra driver job before round 1 —
@@ -976,12 +972,8 @@ def _components(docs: DataFrame, pairs: DataFrame,
     nodes = edges.select(F.col("a").alias("doc_id")).distinct()
     labels = nodes.select("doc_id", F.col("doc_id").alias("label")) \
         .localCheckpoint(eager=False)
-    if _dbg:
-        print(f"[cc] edges checkpoint sec={_time.time()-_t0:.2f}",
-              flush=True)
     converged = False
     for _it in range(max_iters):
-        _t0 = _time.time()
         if _it == 0:
             # round 1: labels are the identity, so the neighbor min is
             # a plain edge aggregation — no join needed (r6)
@@ -1013,9 +1005,6 @@ def _components(docs: DataFrame, pairs: DataFrame,
             .drop("_old").localCheckpoint(eager=False)
         changed = new_labels.where("_chg").isEmpty()
         labels = new_labels.drop("_chg")
-        if _dbg:
-            print(f"[cc] round sec={_time.time()-_t0:.2f} "
-                  f"converged={changed}", flush=True)
         if changed:  # isEmpty() True == nothing changed
             converged = True
             break

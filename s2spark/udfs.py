@@ -57,41 +57,15 @@ def s2_neighbors_udf(lvl: int):
     return _nbrs
 
 
-def s2_disk_expand_udf(lvl: int, steps: int):
-    """UDF factory: expand each row's ARRAY of level-``lvl`` cell ids by
-    ``steps`` Moore rings in one batch (the kNN exponential-growth step
-    — VERDICT r3 item 1: one shuffle per round instead of one per
-    ring). Rows are flattened into (row, cell) parallel arrays, the
-    whole batch expands through ``cellops.disk_expand_owned`` (one
-    vectorized neighbors + dedupe pass per ring), and the result splits
-    back per row — no per-row Python in the expansion itself."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _disk(tiles: pd.Series) -> pd.Series:
-        lens = np.fromiter((len(t) for t in tiles), dtype=np.int64,
-                           count=len(tiles))
-        if lens.sum() == 0:
-            return pd.Series([[] for _ in range(len(tiles))])
-        owner = np.repeat(np.arange(len(tiles), dtype=np.int64), lens)
-        cells = np.concatenate([np.asarray(t, dtype=np.int64)
-                                for t in tiles]).view(np.uint64)
-        owner, cells = cellops.disk_expand_owned(owner, cells, lvl, steps)
-        # owner comes back sorted (np.unique) -> split at boundaries
-        bounds = np.searchsorted(owner, np.arange(1, len(tiles)))
-        return pd.Series([c.tolist()
-                          for c in np.split(cells.view(np.int64), bounds)])
-
-    return _disk
-
-
 def s2_disk_expand_var_udf(lvl: int):
-    """UDF factory: like :func:`s2_disk_expand_udf` but with a PER-ROW
-    ring count column (the bounded kNN straggler fallback — VERDICT r4
-    item 3: each straggler expands to the disk covering its own proven
-    max feasible radius, not to every occupied tile). Rows are grouped
-    by their step value so each distinct count pays one vectorized
-    ``disk_expand_owned`` pass; straggler sets are small and their
-    distinct ring counts few."""
+    """UDF factory: expand each row's ARRAY of level-``lvl`` cell ids
+    by a PER-ROW ring count (``steps`` column) into the covering disk —
+    the kNN candidate disks: a literal count for the opening disk, each
+    straggler's own proven or escalation radius in pass 2. Rows are
+    grouped by their step value so each distinct count pays one
+    vectorized ``cellops.disk_expand_owned`` pass (neighbors + dedupe
+    per ring); the result splits back per row — no per-row Python in
+    the expansion itself."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def _disk(tiles: pd.Series, steps: pd.Series) -> pd.Series:

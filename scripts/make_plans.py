@@ -25,12 +25,11 @@ variant, zero Exchange in the map-side variant, WholeStageCodegen
 tile math, pushed parquet filters / pruned columns, equi-joins (not
 theta joins) for every pair-generation op.
 
-Iterative operators (knn_join_df ring growth, dedup_components label
-propagation) run a short driver loop of the SAME per-round plan —
-one hash join + partial/final aggregate per round with
-localCheckpoint lineage truncation — so their scaling story is the
-per-round plan shown by their building blocks (pip/bucket joins,
-groupBy-min).
+Multi-action operators (knn_join_df's two certified disk passes,
+dedup_components label propagation) are not dumped: each pass or
+round is one broadcast hash join + window/aggregate plan with
+localCheckpoint lineage truncation, so their scaling story is the
+plan shown by their building blocks (pip/bucket joins, groupBy-min).
 """
 
 
@@ -127,9 +126,9 @@ def main() -> None:
         qs["dedup_keep_best"](spark, SF_DIR)))
     # (knn_many is NOT dumped here: its result is an eagerly-executed
     # localCheckpoint, so the "plan" would be a vacuous ExistingRDD
-    # scan; the round structure is documented in joins.knn_join_df and
-    # its exactness pinned by the brute-force twins in
-    # tests/test_knn_paths.py + the driver oracle)
+    # scan; the two-pass structure is documented in
+    # joins.knn_join_df and its exactness pinned by the brute-force
+    # twins in tests/test_knn_paths.py + the driver oracle)
 
     out = [HEADER]
     for title, df in sections:

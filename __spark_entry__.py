@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -33,8 +34,9 @@ _SHIPPED: set = set()
 def _ensure_shipped(spark: SparkSession) -> None:
     """make ``s2spark`` importable on executor Python workers even
     when the driver process runs from a foreign cwd: ship the package
-    zip via addPyFile (idempotent per session)."""
-    key = id(spark.sparkContext)
+    zip via addPyFile (once per Spark application; a failed ship warns
+    here instead of surfacing later as executor unpickling errors)."""
+    key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -57,8 +59,9 @@ def _ensure_shipped(spark: SparkSession) -> None:
             import make_pyfiles
             zip_path = make_pyfiles.main()
         spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # same-cwd runs work without shipping
+    except Exception as e:  # same-cwd runs still work without shipping
+        warnings.warn(f"s2spark: could not ship {zip_path} to the "
+                      f"executors: {type(e).__name__}: {e}", stacklevel=3)
     _SHIPPED.add(key)
 
 

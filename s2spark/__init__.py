@@ -19,4 +19,6 @@ symbol-level mapping; the reference mount was empty so anchors are
 symbol names, not line numbers).
 """
 
+from s2spark import _zipcache  # noqa: F401  (first: patches zipimport)
+
 __version__ = "0.1.0"

@@ -286,41 +286,27 @@ def _q_pip_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """point-in-region as a Catalyst-native bucketed broadcast hash
     join (SURVEY §2.5b) — same oracle as the other variants."""
     cov_rows, params = _coverings()
-    cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
-    return J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df, params,
-                               bucket_level=8)
+    return J.pip_join_bucketed(FX.points_df(spark, sf_dir),
+                               J.coverings_df(spark, cov_rows), params)
 
 
 def _q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """same join as a salted shuffle equi-join on cell-id prefix
-    buckets (SURVEY §2.5c) — must equal the broadcast variant AND the
+    """the shuffle arm (SURVEY §2.5c): the bucket join as a sort-merge
+    join hash-partitioned on the cell-id bucket, hot buckets split by
+    AQE's skew join — must equal the broadcast variant AND the
     oracle."""
     cov_rows, params = _coverings()
-    cov_df = J.coverings_df(spark, cov_rows)
-    return J.pip_join_salted(FX.points_df(spark, sf_dir), cov_df, params)
+    return J.pip_join_bucketed(FX.points_df(spark, sf_dir),
+                               J.coverings_df(spark, cov_rows), params,
+                               broadcast_covering=False)
 
 
 def _q_pip_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """planner-routed PIP join (SURVEY §4.3): sampled bucket stats →
-    hot-tile salt map → choose_pip_strategy picks broadcast-bucketed /
-    salted / targeted-salted; must equal every other PIP variant AND
-    the oracle. Covers strategy selection end-to-end (VERDICT r1
-    item 9)."""
-    from s2spark import plan as P
+    """router-chosen PIP join (SURVEY §4.3): the map-side stab while
+    the covering fits under the broadcast limit, else the sort-merge
+    arm; must equal every other PIP variant AND the oracle."""
     cov_rows, params = _coverings()
-    pts = FX.points_df(spark, sf_dir)
-    # r6: probe point skew only when the covering cannot broadcast —
-    # on the broadcast path the probe pass over the point table is
-    # pure cost (P.choose_pip_plan; decisions unchanged)
-    strategy, salts = P.choose_pip_plan(pts, len(cov_rows),
-                                        bucket_level=8)
-    cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
-    if strategy == "bucketed":
-        return J.pip_join_bucketed(pts, cov_df, params, bucket_level=8)
-    if strategy == "salted_targeted":
-        return P.pip_join_salted_targeted(pts, cov_df, params, salts,
-                                          bucket_level=8)
-    return J.pip_join_salted(pts, cov_df, params)
+    return J.pip_join(FX.points_df(spark, sf_dir), cov_rows, params)
 
 
 def _q_pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:

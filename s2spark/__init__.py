@@ -9,8 +9,8 @@ cell-neighbor expansion), re-expressed Spark-first:
   batched through Arrow into pandas UDFs (no per-row Python);
 - Column-expression cell algebra (``s2spark.columns``) — parent /
   range / level / token as pure Catalyst expressions (JVM codegen);
-- joins (``s2spark.joins``) — point-in-region as broadcast /
-  salted-shuffle equi-joins over covering cells + exact verify,
+- joins (``s2spark.joins``) — point-in-region as a map-side interval
+  stab or a bucket equi-join over covering cells + exact verify,
   kNN via certified neighbor disks;
 - coverer (``s2spark.coverer``) — RegionCoverer best-first search.
 

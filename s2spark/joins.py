@@ -11,23 +11,21 @@ stage:
   closure; each Arrow batch of points does searchsorted + gather +
   vectorized exact verify. The Spark form of the reference's
   sorted-id bisect, amortized over batches.
-- :func:`pip_join_salted` — shuffle equi-join for covering sets too
-  large to broadcast: both sides keyed by a fixed coarse bucket level
-  (cell-id prefix) plus an explicit salt (covering side exploded ×S,
-  point side hashed), BETWEEN range filter, then the same exact verify.
-  AQE still splits residual skew; the salt handles single hot keys.
-- :func:`pip_join_bucketed` — Catalyst-native broadcast hash equi-join
-  on a finer bucket prefix: scalar encode UDF, bucket bit math,
-  broadcast hash join + BETWEEN filter, then a scalar exact-verify
-  UDF (two Python crossings).
+- :func:`pip_join_bucketed` — Catalyst-native equi-join on the
+  level-:data:`BUCKET_LEVEL` cell-id prefix: scalar encode UDF, bucket
+  bit math, hash join + BETWEEN filter, then a scalar exact-verify UDF
+  (two Python crossings). With ``broadcast_covering=False`` it is the
+  shuffle arm: a sort-merge join hash-partitioned on the bucket, whose
+  hot-city partitions AQE's skew-join rule splits from the actual
+  shuffle sizes.
+- :func:`pip_join` — the router: the stab while the covering fits in
+  memory, else the sort-merge bucket join.
 
-All three variants return identical (region_id, point_id) sets; the
-tests assert it and the DuckDB oracle checks each against brute-force
-exact geometry. The map-side stab is the default for callers whose
-covering fits in memory (:func:`raster_vector_align`, streaming PIP):
-on 4 CPUs it ran the flagship about 2x faster than the bucketed hash
-join, whose level-8 bucket probe emitted ~3x the rows the BETWEEN
-filter kept.
+Both arms return identical (region_id, point_id) sets; the tests
+assert it and the DuckDB oracle checks each against brute-force exact
+geometry. On 4 CPUs the stab ran the flagship about 2x faster than the
+bucketed hash join, whose level-8 bucket probe emitted ~3x the rows the
+BETWEEN filter kept.
 """
 
 from __future__ import annotations
@@ -61,8 +59,10 @@ from s2spark.kernels import hilbert
 from s2spark.kernels import regions as RK
 
 SIGN = 1 << 63
-BUCKET_LEVEL = 4  # coarse prefix level for the shuffle variant
-DEFAULT_SALT = 8
+BUCKET_LEVEL = 8  # cell-id prefix level both bucket-join sides key on
+# above this many covering rows (the stab index's size) the router
+# leaves the map-side stab for the sort-merge bucket join
+BROADCAST_COVERING_LIMIT = 5_000_000
 
 
 def _sortable(u: int) -> int:
@@ -109,10 +109,10 @@ _COVDF_CACHE: dict = {}
 
 def coverings_df(spark: SparkSession, covering_rows: list[tuple],
                  bucket_level: int = BUCKET_LEVEL) -> DataFrame:
-    """covering rows -> DataFrame keyed by coarse bucket for the
-    shuffle join: (region_id, cell_id, range_min_s, range_max_s,
-    interior, bucket). Cells coarser than the bucket level are exploded
-    into their bucket-level descendants.
+    """covering rows -> DataFrame keyed by cell-id bucket for
+    :func:`pip_join_bucketed`: (region_id, cell_id, range_min_s,
+    range_max_s, interior, bucket). Cells coarser than the bucket
+    level are exploded into their bucket-level descendants.
 
     Memoized per (session, rows content, level) — r6: the ~24k-row
     bucket explosion plus createDataFrame's row-by-row pickling cost
@@ -183,22 +183,14 @@ def verify_matches(lat: np.ndarray, lng: np.ndarray,
 
 
 def make_verify_udf(params_by_region: dict[int, tuple[str, list[float]]],
-                    with_interior: bool = False):
-    """pandas UDF (region_id, lat, lng[, interior]) -> contained.
+                    with_interior: bool = True):
+    """pandas UDF (region_id, lat, lng, interior) -> contained.
 
-    Exact verify for the join variants; params ride in the closure.
-    With ``with_interior``, rows flagged as interior-cell hits are
-    accepted without exact-geometry work (kernel-level mask)."""
-
+    Exact verify for the bucket join; params ride in the closure. Rows
+    flagged as interior-cell hits are accepted without exact-geometry
+    work (kernel-level mask). ``with_interior=False`` is rejected."""
     if not with_interior:
-        @F.pandas_udf(BooleanType())
-        def _verify(region_id: pd.Series, lat: pd.Series,
-                    lng: pd.Series) -> pd.Series:
-            return pd.Series(verify_matches(lat.to_numpy(np.float64),
-                                            lng.to_numpy(np.float64),
-                                            region_id.to_numpy(np.int64),
-                                            params_by_region))
-        return _verify
+        raise ValueError("make_verify_udf takes the interior column")
 
     @F.pandas_udf(BooleanType())
     def _verify_i(region_id: pd.Series, lat: pd.Series, lng: pd.Series,
@@ -269,7 +261,7 @@ def pip_join_broadcast(points: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# variant (b): salted shuffle equi-join on bucket prefix
+# variant (b): bucket equi-join on the cell-id prefix
 # ---------------------------------------------------------------------------
 
 def with_cell_id(points: DataFrame) -> DataFrame:
@@ -278,55 +270,25 @@ def with_cell_id(points: DataFrame) -> DataFrame:
     return points.withColumn("cell_id", s2_cell_id("lat", "lng"))
 
 
-def pip_join_salted(points: DataFrame, cov_df: DataFrame,
-                    params_by_region: dict[int, tuple[str, list[float]]],
-                    num_salts: int = DEFAULT_SALT,
-                    bucket_level: int = BUCKET_LEVEL,
-                    broadcast_covering: bool = False) -> DataFrame:
-    """point-in-region join as a salted hash equi-join.
-
-    points side: bucket = parent(cell_id, bucket_level) (pure codegen),
-    salt = hash(point_id) % S. covering side: exploded ×S so every
-    (bucket, salt) partition holds the full covering slice — a hot
-    bucket (city) spreads over S reducers. BETWEEN on sortable leaf
-    ranges prunes to true covering cells, exact verify confirms.
-    """
-    pts = points if "cell_id" in points.columns else with_cell_id(points)
-    pts = pts.withColumn("bucket", CC.parent("cell_id", bucket_level)) \
-             .withColumn("leaf_s", CC.sortable("cell_id")) \
-             .withColumn("salt",
-                         F.pmod(F.hash("point_id"), F.lit(num_salts)))
-    cov = cov_df.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(num_salts)])))
-    if broadcast_covering:
-        cov = F.broadcast(cov)
-    joined = pts.join(
-        cov,
-        (pts["bucket"] == cov["bucket"]) & (pts["salt"] == cov["salt"])
-        & pts["leaf_s"].between(cov["range_min_s"], cov["range_max_s"]),
-        "inner")
-    verify = make_verify_udf(params_by_region)
-    accepted = joined.where(
-        F.col("interior") | verify("region_id", "lat", "lng"))
-    return accepted.select("region_id", "point_id")
-
-
 def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
                       params_by_region: dict[int, tuple[str, list[float]]],
-                      bucket_level: int = 6,
+                      bucket_level: int = BUCKET_LEVEL,
                       broadcast_covering: bool = True,
                       extra_cols: tuple[str, ...] = (),
                       emit_cell_id: bool = False) -> DataFrame:
-    """point-in-region as a Catalyst-native broadcast hash equi-join.
+    """point-in-region as a Catalyst-native bucket equi-join.
 
     One scalar-UDF encode pass (narrow columns through Arrow), then
-    JVM-side bucket prefix via codegen bit math, broadcast hash join
-    against the bucket-exploded covering table and BETWEEN range
-    filter, and the exact-verify scalar UDF only on non-interior
-    candidates. Two Python crossings plus a hash probe that returns
-    every covering cell of the bucket: on the 4-CPU flagship it ran
-    about 2x slower than :func:`pip_join_broadcast`, the default
-    wherever the covering fits in memory.
+    JVM-side bucket prefix via codegen bit math, an equi-join against
+    the bucket-exploded covering table with a BETWEEN range filter,
+    and the exact-verify scalar UDF only on non-interior candidates.
+
+    ``broadcast_covering`` picks the join: a broadcast hash join, or a
+    sort-merge join hash-partitioned on the bucket (the ``merge`` hint
+    also keeps AQE from demoting it to a broadcast). A hot city's
+    bucket partition is then split by AQE's skew-join rule, which
+    copies the covering slice it joins against — from the actual
+    shuffle sizes, with no sample pass.
 
     ``cov_df`` must be built with the same ``bucket_level``
     (:func:`coverings_df`).
@@ -334,7 +296,7 @@ def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
     pts = points if "cell_id" in points.columns else with_cell_id(points)
     pts = pts.withColumn("_bucket", CC.parent("cell_id", bucket_level)) \
              .withColumn("_leaf_s", CC.sortable("cell_id"))
-    cov = F.broadcast(cov_df) if broadcast_covering else cov_df
+    cov = F.broadcast(cov_df) if broadcast_covering else cov_df.hint("merge")
     joined = pts.join(
         cov, (pts["_bucket"] == cov["bucket"])
         & pts["_leaf_s"].between(cov["range_min_s"], cov["range_max_s"]),
@@ -343,7 +305,7 @@ def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
     # interior-cell hits (the reference's interior-covering
     # optimization) — branching in the plan would re-evaluate the
     # whole join+encode subtree per branch
-    verify = make_verify_udf(params_by_region, with_interior=True)
+    verify = make_verify_udf(params_by_region)
     accepted = joined.where(
         verify("region_id", "lat", "lng", "interior"))
     cols = [F.col("region_id"), pts["point_id"]]
@@ -351,6 +313,20 @@ def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
     if emit_cell_id:
         cols.append(pts["cell_id"])
     return accepted.select(*cols)
+
+
+def pip_join(points: DataFrame, covering_rows: list[tuple],
+             params_by_region: dict[int, tuple[str, list[float]]]
+             ) -> DataFrame:
+    """point-in-region with the arm chosen by covering size: the
+    map-side stab while its index (one entry per covering row) fits
+    under :data:`BROADCAST_COVERING_LIMIT`, else the sort-merge bucket
+    join. Output: (region_id, point_id)."""
+    if len(covering_rows) <= BROADCAST_COVERING_LIMIT:
+        return pip_join_broadcast(points, covering_rows, params_by_region)
+    cov_df = coverings_df(points.sparkSession, covering_rows)
+    return pip_join_bucketed(points, cov_df, params_by_region,
+                             broadcast_covering=False)
 
 
 def pip_semi(points: DataFrame, covering_rows, params_by_region,

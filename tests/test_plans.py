@@ -46,13 +46,6 @@ def test_bucketed_join_single_encode_pass(spark, sf_dir, pieces):
         spark.conf.set("spark.sql.constraintPropagation.enabled", old)
 
 
-def test_salted_join_no_nested_loop(spark, sf_dir, pieces):
-    cov_rows, params = pieces
-    cov_df = J.coverings_df(spark, cov_rows)
-    df = J.pip_join_salted(FX.points_df(spark, sf_dir), cov_df, params)
-    assert "BroadcastNestedLoopJoin" not in _plan(df)
-
-
 def test_mapside_join_has_no_shuffle(spark, sf_dir, pieces):
     """the interval-stab variant is a pure map-side pass — zero
     Exchange nodes before the output."""

@@ -27,6 +27,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from s2spark.session import make_session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SCALE_ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "128000000"))
@@ -48,25 +50,6 @@ BENCH_QUERIES = [
     # r5 additions
     "tile_rollup_sketch",
 ]
-
-
-def make_session(cores: int, shuffle_partitions: int | None = None):
-    from pyspark.sql import SparkSession
-    b = (SparkSession.builder.master(f"local[{cores}]")
-         .appName(f"s2spark-bench-{cores}")
-         .config("spark.sql.shuffle.partitions",
-                 str(shuffle_partitions or max(2 * cores, 16)))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.driver.memory", "24g")
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-         # constraint propagation injects IsNotNull filters over UDF-
-         # derived join keys, making Catalyst evaluate the encode UDF
-         # twice — measured 2x wall on the flagship join
-         .config("spark.sql.constraintPropagation.enabled", "false")
-         .config("spark.ui.enabled", "false"))
-    s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    return s
 
 
 def synthetic_points(spark, n: int):

@@ -27,11 +27,6 @@ REPS = int(os.environ.get("REPS", "3"))
 ROUND = os.environ.get("ROUND", "r06")
 
 
-def make_session():
-    import bench
-    return bench.make_session(bench.CPUS)
-
-
 def main() -> None:
     import bench
     import __spark_entry__ as E
@@ -42,7 +37,7 @@ def main() -> None:
     names = bench.BENCH_QUERIES if (not args or "--all" in sys.argv) \
         else args
 
-    spark = make_session()
+    spark = bench.make_session(bench.CPUS)
     qs = E.queries()
     qs["tile_assign"](spark, SF_DIR).limit(1000).count()  # warm workers
 

@@ -33,7 +33,6 @@ from dataclasses import dataclass
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from s2spark import columns as CC
@@ -201,25 +200,6 @@ def read_checkpointed(spark: SparkSession, path: str,
     return _read_parquet(spark, *dirs)
 
 
-def write_bucketed_table(df: DataFrame, table: str, bucket_col: str,
-                         n_buckets: int = 16,
-                         sort_col: str | None = None) -> None:
-    """persist a DataFrame as a Hive-bucketed table on ``bucket_col``
-    (SURVEY §4.3 storage partitioning): two tables bucketed the same
-    way equi-join WITHOUT a shuffle — at 100 TB, pre-bucketing the
-    point table on its tile key amortizes the shuffle across every
-    downstream join/aggregate (plan-asserted in tests)."""
-    w = df.write.mode("overwrite").format("parquet") \
-        .bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 # ---------------------------------------------------------------------------
 # Hilbert-clustered layout: covering-range scans prune row groups/files
 # ---------------------------------------------------------------------------
@@ -247,15 +227,6 @@ def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
         .write.mode("overwrite").parquet(path)
 
 
-def scan_cell_range(spark: SparkSession, path: str,
-                    cell_lo: int, cell_hi: int) -> DataFrame:
-    """scan a clustered dataset for ids in the uint64-inclusive range
-    [cell_lo, cell_hi] (e.g. a covering cell's range_min..range_max).
-    The BETWEEN lands in the scan's PushedFilters -> row-group min/max
-    pruning on the sorted layout."""
-    return scan_cell_ranges(spark, path, [(cell_lo, cell_hi)])
-
-
 def scan_cell_ranges(spark: SparkSession, path: str,
                      ranges: list) -> DataFrame:
     """scan a clustered dataset for ids in ANY of the uint64-inclusive
@@ -277,12 +248,3 @@ def scan_cell_ranges(spark: SparkSession, path: str,
         f"{CELL_SORT_COL} BETWEEN {_sortable_scalar(lo)}L"
         f" AND {_sortable_scalar(hi)}L" for lo, hi in ranges)
     return _read_parquet(spark, path).where(pred or "false")
-
-
-def result_fingerprint(df: DataFrame) -> int:
-    """order-insensitive content hash of a DataFrame (resume tests:
-    interrupted+resumed output must fingerprint-equal a clean run)."""
-    h = df.select(F.xxhash64(*sorted(df.columns)).alias("h")) \
-        .agg(F.expr("bit_xor(h)").alias("s"),
-             F.count("*").alias("n")).collect()[0]
-    return (h["s"] or 0, h["n"])

@@ -635,7 +635,6 @@ def distance_join(points: DataFrame, radius_rad: float,
                    F.col("lng").alias("lng2"), "tile")
     cand = a.join(b, (a["zone"] == b["tile"]) & (a["p1"] < b["p2"]))
 
-    @F.pandas_udf("double")
     def _chord2(lat1: pd.Series, lng1: pd.Series,
                 lat2: pd.Series, lng2: pd.Series) -> pd.Series:
         return pd.Series(RK.chord_dist2(lat1.to_numpy(np.float64),
@@ -643,8 +642,11 @@ def distance_join(points: DataFrame, radius_rad: float,
                                         lat2.to_numpy(np.float64),
                                         lng2.to_numpy(np.float64)))
 
+    # marked nondeterministic only so that Catalyst does not push the
+    # dist2 filter below the projection and evaluate the UDF twice
+    chord2 = F.pandas_udf(_chord2, "double").asNondeterministic()
     return cand \
-        .withColumn("dist2", _chord2("lat1", "lng1", "lat2", "lng2")) \
+        .withColumn("dist2", chord2("lat1", "lng1", "lat2", "lng2")) \
         .where(F.col("dist2") <= F.lit(thresh2)) \
         .select("p1", "p2", F.round("dist2", 12).alias("dist2"))
 

@@ -108,29 +108,3 @@ def s2_vertex_neighbors_udf(lvl: int):
                           for row, v in zip(nb_i64, has4)])
 
     return _vn
-
-
-def s2_edge_neighbors_udf(lvl: int):
-    """UDF factory: array of the 4 edge neighbors at level ``lvl``
-    (``CellId.get_edge_neighbors``)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _nbrs(cell_id: pd.Series) -> pd.Series:
-        ids = cell_id.to_numpy(np.int64).view(np.uint64)
-        nb = cellops.get_edge_neighbors(ids, lvl).view(np.int64)
-        return pd.Series(list(nb))
-
-    return _nbrs
-
-
-@F.pandas_udf(DoubleType())
-def s2_chord_dist2(lat1: pd.Series, lng1: pd.Series,
-                   lat2: pd.Series, lng2: pd.Series) -> pd.Series:
-    """squared chord distance |p1 - p2|² between two lat/lng points —
-    monotone in angle, exact-arithmetic-friendly (kNN ranking metric)."""
-    x1, y1, z1 = hilbert.lat_lng_to_xyz(lat1.to_numpy(np.float64),
-                                        lng1.to_numpy(np.float64))
-    x2, y2, z2 = hilbert.lat_lng_to_xyz(lat2.to_numpy(np.float64),
-                                        lng2.to_numpy(np.float64))
-    dx, dy, dz = x1 - x2, y1 - y2, z1 - z2
-    return pd.Series(dx * dx + dy * dy + dz * dz)

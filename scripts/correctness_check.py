@@ -23,15 +23,11 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main() -> None:
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
+    from s2spark.session import make_session
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("s2spark-correctness")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(8)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

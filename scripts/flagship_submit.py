@@ -16,7 +16,6 @@ tile) aggregates through the resumable manifest-checkpointed sink
 
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -28,10 +27,9 @@ def main() -> None:
     from s2spark import fixtures as FX
     from s2spark import io as SIO
     from s2spark import joins as J
+    from s2spark.session import make_session
 
-    spark = SparkSession.builder.appName("s2spark-flagship").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    spark = make_session(None)
 
     cov_rows = J.compute_coverings(FX.region_objects())
     params = FX.region_params()

@@ -24,7 +24,6 @@ training-ingest quarantine gate), not silently passed through.
 
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -38,12 +37,10 @@ def main() -> None:
     from s2spark import images as IM
     from s2spark import io as SIO
     from s2spark import joins as J
+    from s2spark.session import make_session
     from s2spark.text import md5_int64
 
-    spark = SparkSession.builder.appName("s2spark-image-ingest") \
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    spark = make_session(None)
 
     cov_rows = J.compute_coverings(FX.region_objects())
     params = FX.region_params()

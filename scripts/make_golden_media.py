@@ -26,15 +26,11 @@ GOLDEN = os.path.join(os.path.dirname(os.path.dirname(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from s2spark import images as IM
     from s2spark import multimodal as MM
+    from s2spark.session import make_session
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("s2spark-golden-media")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(8)
 
     jobs = {
         "resized_images": IM.resize_images(IM.synth_images(spark, 500),

@@ -34,16 +34,10 @@ plan shown by their building blocks (pip/bucket joins, groupBy-min).
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as E
+    from s2spark.session import make_session
 
-    spark = (SparkSession.builder.master("local[4]")
-             .appName("s2spark-plans")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.sql.constraintPropagation.enabled", "false")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(4)
 
     from s2spark import fixtures as FX
     from s2spark import joins as J

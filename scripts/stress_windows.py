@@ -24,18 +24,13 @@ COLD_KEYS = 100_000
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from s2spark.session import make_session
     from s2spark.windows import bucketed_row_number
 
-    spark = (SparkSession.builder.master(f"local[{os.cpu_count()}]")
-             .appName("s2spark-skew-stress")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(os.cpu_count(), shuffle_partitions=64)
 
     # one hot key owns HOT_SHARE of the table; the rest spread evenly.
     # v (the order key) is unique per key: the hot key keeps raw id,

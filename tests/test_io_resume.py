@@ -23,6 +23,23 @@ def _chunk_fn(spark, sf_dir):
     return df_for_chunk
 
 
+def result_fingerprint(df):
+    """order-insensitive content hash of a DataFrame: interrupted and
+    resumed output must fingerprint-equal a clean run."""
+    h = df.select(F.xxhash64(*sorted(df.columns)).alias("h")) \
+        .agg(F.expr("bit_xor(h)").alias("s"),
+             F.count("*").alias("n")).collect()[0]
+    return (h["s"] or 0, h["n"])
+
+
+def write_bucketed_table(df, table: str, bucket_col: str,
+                         n_buckets: int) -> None:
+    """persist ``df`` as a Hive-bucketed parquet table on
+    ``bucket_col`` (SURVEY §4.3 storage partitioning)."""
+    df.write.mode("overwrite").format("parquet") \
+        .bucketBy(n_buckets, bucket_col).saveAsTable(table)
+
+
 def test_resume_after_crash(spark, sf_dir, tmp_path):
     out_clean = str(tmp_path / "clean")
     out_crash = str(tmp_path / "crash")
@@ -46,7 +63,7 @@ def test_resume_after_crash(spark, sf_dir, tmp_path):
 
     a = SIO.read_checkpointed(spark, out_clean)
     b = SIO.read_checkpointed(spark, out_crash)
-    assert SIO.result_fingerprint(a) == SIO.result_fingerprint(b)
+    assert result_fingerprint(a) == result_fingerprint(b)
 
     # lineage + metrics recorded
     m = SIO.read_manifest(out_crash)
@@ -108,13 +125,9 @@ def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
     hash-join with ZERO Exchange (the pre-bucketed co-located join —
     at 100 TB the shuffle is paid once at write time, not per query).
     The bucketed join result equals the plain shuffle join."""
-    import pyspark.sql.functions as F
-
     from s2spark import columns as CC
-    from s2spark import io as SIO
     from s2spark import synth
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     base = li.select(F.col("l_orderkey").alias("k"),
                      synth.synth_cell_col().alias("cell_id")) \
@@ -122,11 +135,12 @@ def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
     left = base.groupBy("tile").agg(F.count("*").alias("n_left"))
     right = base.where(F.col("k") % 2 == 0).groupBy("tile") \
         .agg(F.count("*").alias("n_right"))
-    SIO.write_bucketed_table(left, "t_left", "tile", n_buckets=8)
-    SIO.write_bucketed_table(right, "t_right", "tile", n_buckets=8)
+    old_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = SIO.read_table(spark, "t_left").join(
-            SIO.read_table(spark, "t_right"), "tile")
+        write_bucketed_table(left, "t_left", "tile", n_buckets=8)
+        write_bucketed_table(right, "t_right", "tile", n_buckets=8)
+        j = spark.table("t_left").join(spark.table("t_right"), "tile")
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         expected = sorted(map(tuple, left.join(right, "tile").collect()))
@@ -134,7 +148,8 @@ def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_left")
         spark.sql("DROP TABLE IF EXISTS t_right")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       old_threshold)
 
 
 def test_snapshot_log_and_time_travel(spark, sf_dir, tmp_path):
@@ -163,7 +178,7 @@ def test_snapshot_log_and_time_travel(spark, sf_dir, tmp_path):
         assert df.count() == expect
     # latest == as_of last snapshot == plain read
     latest = SIO.read_checkpointed(spark, out)
-    assert SIO.result_fingerprint(latest) == SIO.result_fingerprint(
+    assert result_fingerprint(latest) == result_fingerprint(
         SIO.read_checkpointed(spark, out, as_of=snaps[-1]["snapshot_id"]))
     with _pytest.raises(ValueError, match="no snapshot 99"):
         SIO.read_checkpointed(spark, out, as_of=99)

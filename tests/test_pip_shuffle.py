@@ -44,14 +44,9 @@ def test_pip_salted_is_bucket_sort_merge(spark, sf_dir):
     demoted by AQE to a broadcast, and one encode pass."""
     import __spark_entry__ as E
 
-    old = spark.conf.get("spark.sql.constraintPropagation.enabled")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        df = E.queries()["pip_salted"](spark, sf_dir)
-        df.collect()
-        plan = _final_plan(df)
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", old)
+    df = E.queries()["pip_salted"](spark, sf_dir)
+    df.collect()
+    plan = _final_plan(df)
     assert "SortMergeJoin" in plan
     assert "Exchange hashpartitioning(_bucket#" in plan
     assert "Exchange hashpartitioning(bucket#" in plan

@@ -34,16 +34,11 @@ def test_bucketed_join_is_broadcast_hash(spark, sf_dir, pieces):
 def test_bucketed_join_single_encode_pass(spark, sf_dir, pieces):
     """constraint propagation must not duplicate the encode UDF
     (one ArrowEvalPython for encode + one for verify)."""
-    old = spark.conf.get("spark.sql.constraintPropagation.enabled")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        cov_rows, params = pieces
-        cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
-        df = J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df,
-                                 params, bucket_level=8)
-        assert _plan(df).count("ArrowEvalPython") == 2
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", old)
+    cov_rows, params = pieces
+    cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
+    df = J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df,
+                             params, bucket_level=8)
+    assert _plan(df).count("ArrowEvalPython") == 2
 
 
 def test_mapside_join_has_no_shuffle(spark, sf_dir, pieces):
@@ -149,12 +144,17 @@ def test_parquet_filter_pushdown(spark, sf_dir):
 
 def test_distance_join_is_equi_join(spark, sf_dir):
     """the within-distance self-join must be a zone==tile hash
-    equi-join, never a cartesian/theta join."""
+    equi-join, never a cartesian/theta join, and evaluate each Python
+    UDF once: _chord2, _nbrs and one s2_cell_id per self-join side."""
     from s2spark import fixtures as FX
     pts = FX.points_df(spark, sf_dir).where(F.pmod("point_id", 20) == 0)
-    plan = _plan(J.distance_join(pts, 0.005))
+    df = J.distance_join(pts, 0.005)
+    plan = _plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 4
 
 
 def test_star_join_broadcasts_all_dims(spark, sf_dir):

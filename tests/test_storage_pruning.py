@@ -53,8 +53,8 @@ def test_covering_range_scan_prunes_row_groups(spark, sf_dir, tmp_path):
     parent2 = (u & ~(2 * lsb2 - 1)) | lsb2
     lo, hi = parent2 - (lsb2 - 1), parent2 + (lsb2 - 1)
 
-    n_c, m_c = _scan_metrics(IO.scan_cell_range(spark, clustered, lo, hi))
-    n_s, m_s = _scan_metrics(IO.scan_cell_range(spark, shuffled, lo, hi))
+    n_c, m_c = _scan_metrics(IO.scan_cell_ranges(spark, clustered, [(lo, hi)]))
+    n_s, m_s = _scan_metrics(IO.scan_cell_ranges(spark, shuffled, [(lo, hi)]))
 
     # same answer from both layouts, and the range is a real subset
     assert n_c == n_s
@@ -67,7 +67,7 @@ def test_covering_range_scan_prunes_row_groups(spark, sf_dir, tmp_path):
         f"clustered scan read {m_c['numOutputRows']} of {total} rows")
 
     # the range predicate reached the parquet reader
-    plan = IO.scan_cell_range(spark, clustered, lo, hi) \
+    plan = IO.scan_cell_ranges(spark, clustered, [(lo, hi)]) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert IO.CELL_SORT_COL in plan.split("PushedFilters", 1)[1][:200]

@@ -32,7 +32,6 @@ def test_spark_submit_pyfiles(tmp_path, spark, sf_dir):
                                     "bin", "spark-submit")
     out_dir = str(tmp_path / "out")
     cmd = [spark_submit, "--master", "local[2]",
-           "--conf", "spark.ui.enabled=false",
            "--py-files", zip_path,
            os.path.join(ROOT, "scripts", "flagship_submit.py"),
            pts_path, out_dir, "2"]
@@ -79,7 +78,6 @@ def test_image_submit_pyfiles_resume(tmp_path, spark):
                                     "bin", "spark-submit")
     out_dir = str(tmp_path / "out")
     cmd = [spark_submit, "--master", "local[2]",
-           "--conf", "spark.ui.enabled=false",
            "--py-files", zip_path,
            os.path.join(ROOT, "scripts", "image_submit.py"),
            imgs_path, out_dir, "3"]

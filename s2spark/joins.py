@@ -221,9 +221,12 @@ def pip_join_broadcast(points: DataFrame,
     *extra_cols[, cell_id]).
 
     ``points`` needs (point_id, lat, lng). Scales linearly in points
-    with NO shuffle; covering side bounded by driver/broadcast memory.
-    ``emit_cell_id`` passes the leaf id computed in-kernel through, so
-    downstream tiling needs no second encode pass.
+    with NO shuffle. The interval index rides in the task closure, not
+    a Spark broadcast: it is pickled with every task (146 KiB for the
+    flagship's 3,319-cell covering), so the covering side is bounded by
+    driver memory and task size. ``emit_cell_id`` passes the leaf id
+    computed in-kernel through, so downstream tiling needs no second
+    encode pass.
     """
     index = build_interval_index(covering_rows)
     fields = ([StructField("region_id", LongType()),

@@ -9,12 +9,20 @@ from pyspark.sql import SparkSession
 ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    # Spark 4.1 sizes the Arrow batch after EVERY row it feeds a
+    # mapInPandas/mapInArrow (ArrowWriter.sizeInBytes walks the struct
+    # vectors) unless this limit is exactly Int.MaxValue — 37-48% of
+    # the flagship's executor-thread samples (JFR). Batches are then
+    # bounded by maxRecordsPerBatch rows alone. Any smaller value
+    # ("1g" included) brings the per-row check back.
+    "spark.sql.execution.arrow.maxBytesPerBatch": "2147483647",
     # constraint propagation copies UDF-derived join keys into
     # IsNotNull filters, so Catalyst evaluates the encode UDF twice —
     # measured 2x wall on the flagship join (plan-asserted in
     # tests/test_plans.py)
     "spark.sql.constraintPropagation.enabled": "false",
     "spark.ui.enabled": "false",
+    "spark.ui.showConsoleProgress": "false",
 }
 
 

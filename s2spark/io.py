@@ -19,9 +19,13 @@ parquet + JSON-manifest protocol, behind a backend-pluggable API:
 Readers take the schema Spark stored in the parquet footer, so opening
 a table runs no schema-inference Spark job.
 
-Writer clustering: each chunk is ``repartitionByRange`` on the
-sortable cell id, so files are Hilbert-ordered — spatially local,
-min/max-prunable (SURVEY.md §4.3 storage partitioning).
+Writer clustering: each chunk is ``repartitionById`` on a range id
+over bounds from ``columns.leaf_bounds`` (a sample taken in the JVM and
+encoded on the driver, so the encode UDF runs once per row), so files
+hold disjoint Hilbert ranges — spatially local, min/max-prunable
+(SURVEY.md §4.3 storage partitioning). Covering scans read each file's
+footer and open only the files whose ``cell_sort`` row-group spans
+overlap the covering.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ import os
 import time
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -86,24 +91,27 @@ def _parquet_files(directory: str) -> list[str]:
                   and not fn.startswith(("_", ".")))
 
 
+def _data_files(path: str) -> list[str] | None:
+    """the data files of a table path (a file is its own), or None when
+    they cannot be listed here: a directory with subdirectories
+    (partitioned) or a path that is not local."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path) or any(
+            e.is_dir() and not e.name.startswith(("_", "."))
+            for e in os.scandir(path)):
+        return None
+    return [os.path.join(path, fn) for fn in _parquet_files(path)]
+
+
 def _footer_schema(path: str) -> StructType | None:
     """the Spark schema stored in the footer of ``path``'s first data
-    file, or None when there is none to take: a directory with
-    subdirectories (partitioned), no data files, a file not written by
-    Spark, or a path that is not local."""
-    if os.path.isfile(path):
-        first = path
-    elif os.path.isdir(path):
-        if any(e.is_dir() and not e.name.startswith(("_", "."))
-               for e in os.scandir(path)):
-            return None
-        files = _parquet_files(path)
-        if not files:
-            return None
-        first = os.path.join(path, files[0])
-    else:
+    file, or None when there is none to take: no listable data files
+    (see :func:`_data_files`) or a file not written by Spark."""
+    files = _data_files(path)
+    if not files:
         return None
-    meta = pq.read_metadata(first).metadata or {}
+    meta = pq.read_metadata(files[0]).metadata or {}
     if SPARK_SCHEMA_KEY not in meta:
         return None
     return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
@@ -127,7 +135,9 @@ def checkpointed_write(spark: SparkSession, df_for_chunk, path: str,
     completed chunk. Already-committed chunks are skipped (resume).
 
     ``fail_after`` injects a crash after N chunks (resume testing).
-    ``cluster_col``: a cell-id column to Hilbert-cluster files by.
+    ``cluster_col``: a cell-id column to Hilbert-cluster files by — each
+    chunk is routed to 4 files by :func:`columns.range_id` over
+    :func:`columns.leaf_bounds`, whose sample job runs no Python.
     """
     os.makedirs(path, exist_ok=True)
     manifest = read_manifest(path)
@@ -143,7 +153,8 @@ def checkpointed_write(spark: SparkSession, df_for_chunk, path: str,
             raise RuntimeError(f"injected failure before chunk {chunk}")
         df = df_for_chunk(chunk)
         if cluster_col is not None:
-            df = df.repartitionByRange(4, CC.sortable(cluster_col))
+            df = df.repartitionById(4, CC.range_id(
+                cluster_col, CC.leaf_bounds(df, 4, cluster_col)))
         chunk_dir = os.path.join(path, f"chunk={chunk}")
         df.write.mode("overwrite").parquet(chunk_dir)
         files = _parquet_files(chunk_dir)
@@ -205,6 +216,7 @@ def read_checkpointed(spark: SparkSession, path: str,
 # ---------------------------------------------------------------------------
 
 CELL_SORT_COL = "cell_sort"
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
@@ -212,19 +224,38 @@ def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
     """write a dataset Hilbert-CLUSTERED on its cell id (SURVEY §4.3):
     a materialized ``cell_sort`` column (uint64-order ``sortable``,
     CLAUDE.md signedness discipline) is range-partitioned across files
-    and sorted within each, so every file and parquet row group covers
-    a narrow contiguous Hilbert interval. Because Hilbert order
-    preserves spatial locality, a covering-range predicate then reads
-    only the row groups whose min/max overlap the covering — the
-    difference between scanning a tile and scanning the planet at
-    100 TB. The column is STORED (not recomputed) so range predicates
-    are plain attribute comparisons that push down to the parquet
-    reader (and, on Iceberg/Delta, to file-level skipping).
-    Pruning is pinned empirically in tests/test_storage_pruning.py."""
+    (``repartitionById`` on a :func:`columns.range_id` over
+    :func:`columns.leaf_bounds`: disjoint ranges, balanced by a sample
+    whose job runs no Python) and sorted within each, so every file
+    and parquet row group covers a narrow contiguous Hilbert interval.
+    Because Hilbert order preserves spatial locality, a covering-range
+    predicate then reads only the row groups whose min/max overlap the
+    covering — the difference between scanning a tile and scanning the
+    planet at 100 TB. The column is STORED (not recomputed) so range
+    predicates are plain attribute comparisons that push down to the
+    parquet reader, and :func:`scan_cell_ranges` skips whole files by
+    their footer spans. Pruning is pinned empirically in
+    tests/test_storage_pruning.py."""
+    bounds = CC.leaf_bounds(df, num_files, cell_col)
     df.withColumn(CELL_SORT_COL, CC.sortable(cell_col)) \
-        .repartitionByRange(num_files, CELL_SORT_COL) \
+        .repartitionById(num_files, CC.range_id(cell_col, bounds)) \
         .sortWithinPartitions(CELL_SORT_COL) \
         .write.mode("overwrite").parquet(path)
+
+
+def _row_group_spans(path: str) -> list[tuple[int, int]] | None:
+    """the ``cell_sort`` (min, max) of every row group in ``path``'s
+    footer, or None when a row group has no such statistics."""
+    meta = pq.read_metadata(path)
+    spans = []
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        st = next((rg.column(j).statistics for j in range(rg.num_columns)
+                   if rg.column(j).path_in_schema == CELL_SORT_COL), None)
+        if st is None or not st.has_min_max:
+            return None
+        spans.append((st.min, st.max))
+    return spans
 
 
 def scan_cell_ranges(spark: SparkSession, path: str,
@@ -236,6 +267,16 @@ def scan_cell_ranges(spark: SparkSession, path: str,
     layout only row groups overlapping some covering interval are
     read ("scan the tile, not the planet").
 
+    Files are skipped before Spark sees them: each data file's footer
+    is read once, and only files with a row group whose ``cell_sort``
+    span overlaps some range are opened, so no task is launched for a
+    file that cannot match. When no file overlaps, the result is the
+    table's schema under ``where("false")``, which runs no Spark job.
+    The whole path is read, as plain Spark would, when a file has no
+    ``cell_sort`` statistics, the table is partitioned, the path is not
+    local, or more files overlap than Spark lists without a job. Spans
+    come from the footers, never from a manifest that could go stale.
+
     The predicate is ONE SQL string: a Column-object chain costs
     several py4j calls per BETWEEN. An empty covering matches nothing
     and returns an empty DataFrame with the table's schema."""
@@ -244,7 +285,27 @@ def scan_cell_ranges(spark: SparkSession, path: str,
         u = (int(x) ^ (1 << 63)) & ((1 << 64) - 1)
         return u - (1 << 64) if u >= (1 << 63) else u
 
-    pred = " OR ".join(
-        f"{CELL_SORT_COL} BETWEEN {_sortable_scalar(lo)}L"
-        f" AND {_sortable_scalar(hi)}L" for lo, hi in ranges)
+    bounds = [(_sortable_scalar(lo), _sortable_scalar(hi))
+              for lo, hi in ranges]
+    pred = " OR ".join(f"{CELL_SORT_COL} BETWEEN {lo}L AND {hi}L"
+                       for lo, hi in bounds)
+    files = _data_files(path)
+    spans = [] if files is None else [_row_group_spans(f) for f in files]
+    if files is not None and None not in spans:
+        # a span (mn, mx) overlaps a range iff some range with lo <= mx
+        # reaches hi >= mn: bisect the sorted los, then a running max
+        b = np.array(sorted(bounds), dtype=np.int64).reshape(-1, 2)
+        los, his = b[:, 0], np.maximum.accumulate(b[:, 1])
+
+        def overlaps(mn: int, mx: int) -> bool:
+            k = int(np.searchsorted(los, mx, side="right"))
+            return k > 0 and his[k - 1] >= mn
+
+        keep = [f for f, sp in zip(files, spans)
+                if any(overlaps(mn, mx) for mn, mx in sp)]
+        if not keep:
+            return _read_parquet(spark, path).where("false")
+        # Spark lists more paths than the threshold in a job of its own
+        if len(keep) <= int(spark.conf.get(LISTING_THRESHOLD)):
+            return _read_parquet(spark, *keep).where(pred)
     return _read_parquet(spark, path).where(pred or "false")

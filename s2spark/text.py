@@ -336,16 +336,17 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             c = _count_word(F.col("text"), w)
             score = c if score is None else score + c
         d = d.withColumn(f"sc_{lang}", score)
-    pred = None
-    best = None
-    for lang in LANG_ORDER:
-        col = F.col(f"sc_{lang}")
-        if pred is None:
-            pred = F.lit(lang)
-            best = col
-        else:
-            pred = F.when(col > best, F.lit(lang)).otherwise(pred)
-            best = F.when(col > best, col).otherwise(best)
+    # argmax as array functions: a nested when(col > best) chain copies
+    # `best` at every level, and a filter pushed through it generated
+    # over 64 KB (interpreted fallback). array_position finds the first
+    # maximum, so LANG_ORDER breaks ties as the SQL twin's CASE chain
+    # does; that chain also answers LANG_ORDER[0] for a null text.
+    scores = F.array(*[F.col(f"sc_{lang}") for lang in LANG_ORDER])
+    best = F.array_max(scores)
+    pred = F.coalesce(
+        F.element_at(F.array(*map(F.lit, LANG_ORDER)),
+                     F.array_position(scores, best).cast("int")),
+        F.lit(LANG_ORDER[0]))
     return d.select("doc_id", pred.alias("pred_lang"),
                     best.alias("best_score"))
 

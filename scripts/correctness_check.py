@@ -28,6 +28,9 @@ def main() -> None:
     from s2spark.session import make_session
 
     spark = make_session(8)
+    # a plan whose generated code outgrows 64 KB fails here instead of
+    # silently running interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

@@ -97,8 +97,9 @@ def test_snapshot_isolation(spark, sf_dir, tmp_path):
 
 
 def test_hilbert_clustered_files(spark, sf_dir, tmp_path):
-    """repartitionByRange on the sortable cell id yields files with
-    disjoint cell-id ranges (min/max prunable)."""
+    """routing each chunk by range id over sampled leaf bounds
+    (``repartitionById``) yields files with disjoint cell-id ranges
+    (min/max prunable)."""
     out = str(tmp_path / "clust")
     fn = _chunk_fn(spark, sf_dir)
     SIO.checkpointed_write(spark, fn, out, 1, cluster_col="cell_id")

@@ -4,9 +4,11 @@ the row groups whose min/max overlap the range — pinned against the
 same data written randomly ordered, which reads everything.
 
 At 100 TB this layout is the difference between scanning a tile and
-scanning the planet; on Iceberg/Delta the same stored `cell_sort`
-min/max stats drive FILE-level skipping (the file-prunability half is
-asserted from the parquet footers directly)."""
+scanning the planet. The same stored `cell_sort` min/max stats drive
+FILE-level skipping: `scan_cell_ranges` reads the footers and opens
+only the overlapping files (tests/test_clustered_io.py pins that), and
+the file-prunability half is asserted from the parquet footers
+directly here."""
 
 import glob
 

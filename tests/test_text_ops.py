@@ -45,6 +45,21 @@ def test_stratified_sample_rates(spark, sf_dir):
         assert abs(frac - pct) < 0.25  # small-sample tolerance
 
 
+def test_lang_id_consumers_compile_without_fallback(spark, sf_dir):
+    """a filter on ``pred_lang`` is pushed through lang_id's projection
+    in both consumers; its argmax must keep the generated aggregate
+    under the 64 KB method limit, so they run with the interpreted
+    fallback off (a nested when(col > best) argmax raised here)."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert T.stratified_sample(spark, sf_dir).collect()
+        assert T.corpus_curation(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_ngram_jaccard_hot_shingle_salted(spark):
     """hot-shingle guard (VERDICT r2 item 6): a shingle shared by m >
     NGRAM_SALT_TARGET docs must still yield each pair exactly once

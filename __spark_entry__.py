@@ -668,13 +668,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from s2spark import ann as A
     from s2spark import text as T
     raw = {
-        # r6 rotation (VERDICT r5 item 5): the driver certifies the
-        # FIRST 50 keys, so the window leads with the 25 keys whose
-        # last driver certification is OLDEST (the r4-era tail), then
-        # the 15 queries whose internals changed in this optimization
-        # round (so the perf work is re-certified post-change), then
-        # r5-certified fill; the tail is all r5-certified rows.
-        # --- last driver-certified in r4 ---
+        # The driver certifies the FIRST 50 keys, so the window leads
+        # with the keys whose code path changed last (the pair
+        # generators that share text.salted_self_join and the
+        # component ops built on them), then the earlier order.
+        # --- code path changed: one salted self-join, no persists ---
+        "simhash_pairs": T.simhash_pairs,
+        "image_phash_neardup": _q_image_phash_neardup,
+        "image_components": _q_image_components,
+        "multimodal_dedup": _q_multimodal_dedup,
+        "dedup_minhash_lsh": T.minhash_lsh_pairs,
+        "dedup_components": _q_dedup_components,
+        "dedup_keep_best": T.dedup_keep_best,
+        "corpus_curation": _q_corpus_curation,
+        "dedup_ngram_jaccard": T.ngram_jaccard_pairs,
+        "embedding_similar_pairs": A.embedding_cosine_dedup,
+        "embedding_components": _q_embedding_components,
+        # --- earlier order ---
         "tile_assign": _q_tile_assign,
         "cell_algebra": _q_cell_algebra,
         "bigram_model": _q_bigram_model,
@@ -700,37 +710,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_pairs": _q_event_pairs,
         "tfidf_top_terms": _q_tfidf_top_terms,
         "token_quantiles": _q_token_quantiles,
-        # --- internals changed in r6 (knn restructure, components
-        # round fusion, shared image projection, IVF numpy cell
-        # assignment, covering memo) — outputs unchanged, recertify ---
         "knn": _q_knn,
         "knn_many": _q_knn_many,
-        "multimodal_dedup": _q_multimodal_dedup,
-        "dedup_keep_best": T.dedup_keep_best,
-        "image_phash_neardup": _q_image_phash_neardup,
-        "dedup_minhash_lsh": T.minhash_lsh_pairs,
-        "dedup_components": _q_dedup_components,
-        "image_components": _q_image_components,
-        "embedding_components": _q_embedding_components,
-        "corpus_curation": _q_corpus_curation,
         "ann_ivf_buckets": _q_ann_ivf_buckets,
         "ann_ivf": _q_ann_ivf,
         "ann_ivfpq": _q_ann_ivfpq,
         "ann_ivf_recall": _q_ann_ivf_recall,
         "ann_ivfpq_recall": _q_ann_ivfpq_recall,
-        # --- r5-certified fill ---
         "cell_children": _q_cell_children,
         "cellunion_intersect": _q_cellunion_intersect,
         "dedup_exact": T.dedup_exact,
-        "dedup_ngram_jaccard": T.ngram_jaccard_pairs,
         "simhash": T.simhash,
-        "simhash_pairs": T.simhash_pairs,
         "distance_join": _q_distance_join,
         "tile_rollup_sketch": _q_tile_rollup_sketch,
         "tile_rollup_sketch_exact": _q_tile_rollup_sketch_exact,
         "tile_rollup": _q_tile_rollup,
-        # --- tail (beyond the driver's 50-row cap): all certified in
-        # the r5 driver window ---
         "image_tile_stats_exact": _q_image_tile_stats_exact,
         "pricing_summary": _q_pricing_summary,
         "tile_setops": _q_tile_setops,
@@ -748,7 +742,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vertex_neighbors": _q_vertex_neighbors,
         "decontaminate": T.decontaminate,
         "repetition_ratio": T.repetition_ratio,
-        "embedding_similar_pairs": A.embedding_cosine_dedup,
         "ann_bruteforce": A.ann_bruteforce_topk,
         "ann_lsh": A.ann_lsh_topk,
         "pq_codes": _q_pq_codes,

@@ -193,7 +193,6 @@ SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {k}
 
 
 EMB_DEDUP_SALT_TARGET = 100_000   # rows per (bucket, salt) slice
-EMB_DEDUP_MAX_SALT = 16
 
 
 N_IVF_CELLS = 16
@@ -373,38 +372,19 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str,
     buckets (bucketed all-pairs instead of a full cross join).
 
     Hot-bucket guard (VERDICT r1 item 8): one skewed LSH bucket would
-    otherwise put its whole O(m²) pair workload on a single reducer.
-    Per-bucket counts (≤ 2^N_PLANES groups, a cheap partial agg — no
-    driver collect) assign a salt factor to oversized buckets; side a
-    keeps its own salt ``hash(vec_id) % factor``, side c replicates to
-    every salt of its bucket, and the join key becomes (bucket, salt).
-    Each pair still matches exactly once → output identical (pinned by
-    tests), but a hot bucket's pairs spread across ``factor`` tasks.
+    otherwise put its whole O(m²) pair workload on a single reducer,
+    so the bucket self-join runs through :func:`text.salted_self_join`
+    — output identical (pinned by tests), but a hot bucket's pairs
+    spread across its salt factor's tasks.
     """
-    emb = _emb(spark, sf_dir)
-    b = lsh_buckets(spark, sf_dir)
-    e = emb.join(b, "vec_id")
-    sizes = e.groupBy("bucket").agg(F.count("*").alias("bkt_n"))
-    factor = F.least(
-        F.greatest(F.ceil(F.col("bkt_n") / F.lit(EMB_DEDUP_SALT_TARGET)),
-                   F.lit(1)),
-        F.lit(EMB_DEDUP_MAX_SALT)).cast("int")
-    e = e.join(F.broadcast(sizes), "bucket") \
-        .withColumn("salt_factor", factor).drop("bkt_n")
-    a = e.withColumn(
-        "salt", F.pmod(F.hash("vec_id"), F.col("salt_factor"))).alias("a")
-    c = e.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0),
-                                     F.col("salt_factor") - F.lit(1)))) \
-        .alias("c")
-    d = a.join(c, (F.col("a.bucket") == F.col("c.bucket"))
-               & (F.col("a.salt") == F.col("c.salt"))
-               & (F.col("a.vec_id") < F.col("c.vec_id")))
-    dot = _dot(F.col("a.embedding"), F.col("c.embedding"))
+    from s2spark.text import salted_self_join
+    e = _emb(spark, sf_dir).join(lsh_buckets(spark, sf_dir), "vec_id")
+    d = salted_self_join(e, ["bucket"], "vec_id", EMB_DEDUP_SALT_TARGET)
+    dot = _dot(F.col("a.embedding"), F.col("b.embedding"))
     na = _dot(F.col("a.embedding"), F.col("a.embedding"))
-    nb = _dot(F.col("c.embedding"), F.col("c.embedding"))
+    nb = _dot(F.col("b.embedding"), F.col("b.embedding"))
     return d.select(F.col("a.vec_id").alias("v1"),
-                    F.col("c.vec_id").alias("v2"),
+                    F.col("b.vec_id").alias("v2"),
                     (dot / (F.sqrt(na) * F.sqrt(nb))).alias("cosine")) \
         .where(F.col("cosine") >= F.lit(tau)) \
         .select("v1", "v2", F.round("cosine", 6).alias("cosine"))

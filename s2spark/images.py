@@ -329,22 +329,16 @@ def phash_neardup_pairs(images: DataFrame,
     Same pigeonhole banding (scale path, no all-pairs): split the
     64-bit phash into ``max_hamming + 1`` bands; any pair at hamming
     <= max_hamming agrees exactly on at least one band, so the join
-    is a union of band-key EQUI-joins + exact ``bit_count`` filter —
-    through :func:`text.banded_hamming_pairs`, so hot band keys (a
-    corpus of near-black images sharing a phash band) are salt-spread
-    across reducers with the output unchanged (VERDICT r3 item 3).
+    is a band-key EQUI-join + exact ``bit_count`` filter — through
+    :func:`text.banded_hamming_pairs`, so hot band keys (a corpus of
+    near-black images sharing a phash band) are salt-spread across
+    reducers with the output unchanged.
     Output (i1, i2, hamming), deduped across bands.
     """
-    # persist the (id, phash) projection: the band self-join has two
-    # scans of it, and without the persist each side re-runs the full
-    # upstream (payload decode at 100 TB; synth generation here). The
-    # projection is two thin columns — negligible at any scale — and
-    # the cache is INTENTIONALLY left for the session: the returned
-    # DataFrame is lazy (an unpersist here would run before the caller
-    # consumes it), and Spark's cache manager dedupes by canonicalized
-    # plan, so repeat calls (image_components, a second bench pass)
-    # reuse ONE bounded entry rather than stacking new ones.
-    sig = images.select("image_id", "phash").persist()
+    # materialize the thin (id, phash) projection once: the salted band
+    # self-join reads it several times, and each read would re-run the
+    # Python upstream (payload decode at 100 TB; synth generation here)
+    sig = images.select("image_id", "phash").localCheckpoint()
     return _phash_pairs_from_sig(sig, max_hamming)
 
 
@@ -352,24 +346,11 @@ def _phash_pairs_from_sig(sig: DataFrame,
                           max_hamming: int = PHASH_HAMMING_MAX
                           ) -> DataFrame:
     """core of :func:`phash_neardup_pairs` over a prebuilt (and
-    typically persisted) (image_id, phash) projection — split out so
-    :func:`image_components` can share ONE cached projection with the
-    pair generation instead of re-running the upstream per scan."""
-    from s2spark.text import banded_hamming_pairs
-    n_bands = max_hamming + 1
-    assert 64 % n_bands == 0, "band width must divide 64"
-    band_bits = 64 // n_bands
-    mask = (1 << band_bits) - 1
-    parts = [
-        sig.select(
-            F.col("image_id").alias("id"), F.col("phash").alias("sig"),
-            F.lit(i).alias("band"),
-            F.shiftright("phash", i * band_bits)
-            .bitwiseAND(F.lit(mask)).alias("band_key"))
-        for i in range(n_bands)]
-    bands = parts[0]
-    for p in parts[1:]:
-        bands = bands.unionAll(p)
+    materialized) (image_id, phash) projection — split out so
+    :func:`image_components` can share ONE projection with the pair
+    generation instead of re-running the upstream per scan."""
+    from s2spark.text import banded_hamming_pairs, hamming_bands
+    bands = hamming_bands(sig, "image_id", "phash", 64, max_hamming)
     return banded_hamming_pairs(bands, max_hamming) \
         .select(F.col("d1").alias("i1"), F.col("d2").alias("i2"),
                 "hamming")
@@ -410,15 +391,14 @@ def multimodal_dedup(images: DataFrame,
     from s2spark.text import md5_int64
     from s2spark.windows import bucketed_row_number
 
-    # ONE persisted 3-column projection feeds the visual side (via
-    # image_components' own sub-projection cache lookup) AND the
-    # caption side (r6): previously each side re-ran the full image
-    # upstream. ``id_bounds`` forwards a known numeric-suffix range to
-    # bucketed_row_number, skipping its min/max probe job (VERDICT r5
-    # item 4; stale/clamped bounds are rank-exact, tests pin it).
-    base = images.select("image_id", "phash", "caption").persist()
+    # ONE materialized 3-column projection feeds the visual side AND
+    # the caption side, so the full image upstream runs once.
+    # ``id_bounds`` forwards a known numeric-suffix range to
+    # bucketed_row_number, skipping its min/max probe job
+    # (stale/clamped bounds are rank-exact, tests pin it).
+    base = images.select("image_id", "phash", "caption").localCheckpoint()
     comp = (components if components is not None
-            else image_components(base))
+            else _components_from_sig(base))
     tpl = F.regexp_replace("caption", "[0-9]+", "#")
     cap = base.select("image_id", md5_int64(tpl).alias("tpl_hash"))
     # coalesce the surrogate: an id with no digits yields NULL here and
@@ -459,13 +439,19 @@ def image_components(images: DataFrame,
     :func:`phash_neardup_pairs` (i1, i2[, hamming]) compose instead
     of recomputing (VERDICT r4 item 6). Output (image_id,
     canonical_id)."""
+    # ONE materialized (image_id, phash) projection feeds the pair
+    # generation AND the id universe, so the full upstream
+    # (payload decode at 100 TB; synth generation here) runs once.
+    return _components_from_sig(
+        images.select("image_id", "phash").localCheckpoint(),
+        max_hamming, pairs)
+
+
+def _components_from_sig(sig: DataFrame, max_hamming: int = PHASH_HAMMING_MAX,
+                         pairs: DataFrame | None = None) -> DataFrame:
+    """core of :func:`image_components` over a materialized projection
+    holding (image_id, phash)."""
     from s2spark.text import _components
-    # ONE persisted (image_id, phash) projection feeds the pair
-    # generation AND the id universe (r6): the old shape derived `ids`
-    # from a fresh images.select, whose canonical plan did not match
-    # the pair side's cached projection, so the full upstream (payload
-    # decode at 100 TB; synth generation here) ran one extra time.
-    sig = images.select("image_id", "phash").persist()
     if pairs is None:
         pairs = _phash_pairs_from_sig(sig, max_hamming)
     pairs = pairs.select(F.col("i1").alias("d1"),

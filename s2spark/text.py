@@ -111,25 +111,53 @@ FROM documents GROUP BY 1
 # ---------------------------------------------------------------------------
 
 NGRAM_SALT_TARGET = 64   # docs per (shingle, salt) slice before salting
-NGRAM_MAX_SALT = 16
+SALT_MAX = 16            # most slices one hot join key is split into
+
+
+def salted_self_join(df: DataFrame, keys: list[str], id_col: str,
+                     target: int) -> DataFrame:
+    """equi-self-join of ``df`` on ``keys`` with ``a.id < b.id``, the
+    one hot-key guard of the near-dup pair generators (shingles, LSH
+    embedding buckets, pigeonhole band keys).
+
+    A key shared by m rows puts its m² candidate pairs on ONE reducer.
+    Per-key counts (a map-side-combined aggregate) pick the keys that
+    hold more than ``target`` rows — a small table by definition, so
+    it broadcasts — and give each a salt factor
+    ``min(ceil(m / target), SALT_MAX)``; every other key keeps factor
+    1. Side a takes ``pmod(hash(id), factor)``, side b is replicated
+    to every salt of its key, and the join key becomes keys + salt:
+    each pair still meets exactly once per shared key, so the output
+    equals the plain self-join, but a hot key's pairs spread across
+    ``factor`` tasks. Returns the joined rows, sides aliased ``a`` and
+    ``b`` (each with its ``salt`` and ``salt_factor``).
+    """
+    hot = df.groupBy(*keys).agg(F.count("*").alias("key_n")) \
+        .where(F.col("key_n") > F.lit(target)) \
+        .select(*keys, F.least(F.ceil(F.col("key_n") / F.lit(target)),
+                               F.lit(SALT_MAX)).cast("int")
+                .alias("salt_factor"))
+    s = df.join(F.broadcast(hot), keys, "left") \
+        .withColumn("salt_factor", F.coalesce("salt_factor", F.lit(1)))
+    a = s.withColumn(
+        "salt", F.pmod(F.hash(id_col), F.col("salt_factor"))).alias("a")
+    b = s.withColumn(
+        "salt", F.explode(F.sequence(F.lit(0),
+                                     F.col("salt_factor") - F.lit(1)))) \
+        .alias("b")
+    return a.join(b, [F.col(f"a.{k}") == F.col(f"b.{k}")
+                      for k in [*keys, "salt"]]
+                  + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """all-pairs 3-gram Jaccard >= tau via shingle equi-self-join.
 
     This is the documented EXACT twin (MinHash/LSH below is the
-    sub-quadratic web-scale path); the join itself is still guarded
-    against hot shingles (VERDICT r2 item 6, same salt pattern as
-    ``ann.embedding_cosine_dedup``): a stop-word-like shingle shared
-    by m docs would otherwise land its m² candidate pairs on ONE
-    reducer. Per-shingle doc-frequency (cheap partial agg) assigns a
-    salt factor to oversized shingles only — that table is tiny by
-    definition, so it broadcasts; side a keeps its own salt
-    ``hash(doc_id) % factor``, side b replicates to every salt of its
-    shingle, and the join key becomes (sh, salt). Each pair still
-    matches exactly once per shared shingle → output (and the DuckDB
-    oracle) identical, but a hot shingle's pairs spread across
-    ``factor`` tasks.
+    sub-quadratic web-scale path); the join runs through
+    :func:`salted_self_join`, so a stop-word-like shingle shared by
+    many docs is spread across reducers with the output (and the
+    DuckDB oracle) unchanged.
     """
     return _ngram_jaccard_pairs(shingles_df(_docs(spark, sf_dir)))
 
@@ -138,38 +166,15 @@ def _ngram_jaccard_pairs(sh: DataFrame) -> DataFrame:
     """core over a prebuilt (doc_id, sh) shingle table (testable with
     synthetic skew).
 
-    r6 measured and REJECTED two "obvious" optimizations here, both
-    of which lost to this shape at bench scale (fresh-session A/B,
-    min-of-reps): (a) persisting ``sh`` — sizes/hot/both join sides
-    then read one cache, but the eager materialization serializes
-    work the un-persisted plan runs as four cheap parallel subtree
-    copies inside ONE job, and the accurate cache stats flip the
-    pair self-join to a driver-built 260k-row broadcast (2.9s →
-    3.9s); (b) probe-gating the salt machinery the
-    banded_hamming_pairs way — with no hot shingle the machinery
-    already degenerates to factor=1 (empty broadcast + 1-element
-    explode), so the probe job bought nothing and cost ~1s. At
-    100 TB, where the upstream IS expensive, callers should persist
-    the shingle table themselves and accept the join-hint
-    implications; the salted shape itself is scale-right either way.
+    Persisting ``sh`` here was measured and rejected: sizes/hot/both
+    join sides then read one cache, but the eager materialization
+    serializes work the un-persisted plan runs as four cheap parallel
+    subtree copies inside ONE job, and the accurate cache stats flip
+    the pair self-join to a driver-built 260k-row broadcast (2.9s →
+    3.9s).
     """
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    hot = sh.groupBy("sh").agg(F.count("*").alias("df_n")) \
-        .where(F.col("df_n") > NGRAM_SALT_TARGET) \
-        .select("sh", F.least(
-            F.ceil(F.col("df_n") / F.lit(NGRAM_SALT_TARGET)),
-            F.lit(NGRAM_MAX_SALT)).cast("int").alias("salt_factor"))
-    shf = sh.join(F.broadcast(hot), "sh", "left") \
-        .withColumn("salt_factor", F.coalesce("salt_factor", F.lit(1)))
-    a = shf.withColumn(
-        "salt", F.pmod(F.hash("doc_id"), F.col("salt_factor"))).alias("a")
-    b = shf.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0),
-                                     F.col("salt_factor") - F.lit(1)))) \
-        .alias("b")
-    inter = a.join(b, (F.col("a.sh") == F.col("b.sh"))
-                   & (F.col("a.salt") == F.col("b.salt"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id"))) \
+    inter = salted_self_join(sh, ["sh"], "doc_id", NGRAM_SALT_TARGET) \
         .groupBy(F.col("a.doc_id").alias("d1"),
                  F.col("b.doc_id").alias("d2")) \
         .agg(F.count("*").alias("inter"))
@@ -227,21 +232,16 @@ def _minhash_sql() -> str:
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: 8 minhashes → 4 bands of 2; docs sharing
     any band key are candidates. Band keys are strings (no overflow);
-    the band join is an equi-join → shuffles on band key, scales."""
-    # persist the signatures (r6): |docs| rows of 8 ints, but the band
-    # union has 4 arms and the self-join two sides, so without the
-    # persist the FULL shingle+minhash aggregation re-ran up to 8x
-    # per action (at 100 TB that is 8 corpus passes)
-    sig = minhash_signatures(spark, sf_dir).persist()
+    the band join is an equi-join → shuffles on band key, scales. One
+    ``posexplode`` per signature builds the band table, so no band
+    re-runs the signature aggregation and nothing needs a persist."""
     rows_per_band = len(MINHASH_A) // LSH_BANDS
-    bands = None
-    for b in range(LSH_BANDS):
-        cols = [f"m{b * rows_per_band + r}" for r in range(rows_per_band)]
-        part = sig.select(
-            "doc_id", F.lit(b).alias("band"),
-            F.concat_ws("_", *[F.col(c).cast("string") for c in cols])
-            .alias("key"))
-        bands = part if bands is None else bands.unionAll(part)
+    keys = F.array(*[
+        F.concat_ws("_", *[F.col(f"m{b * rows_per_band + r}").cast("string")
+                           for r in range(rows_per_band)])
+        for b in range(LSH_BANDS)])
+    bands = minhash_signatures(spark, sf_dir).select(
+        "doc_id", F.posexplode(keys).alias("band", "key"))
     a = bands.alias("a")
     b = bands.alias("b")
     return a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -1165,96 +1165,44 @@ GROUP BY samp.pred_lang
 SIMHASH_HAMMING_MAX = 3
 
 BAND_SALT_TARGET = 256   # ids per (band, band_key) slice before salting
-BAND_MAX_SALT = 16
 
 
-def banded_hamming_pairs(bands: DataFrame, max_hamming: int,
-                         salt_target: int = BAND_SALT_TARGET,
-                         max_salt: int = BAND_MAX_SALT) -> DataFrame:
-    """salted pigeonhole-band self-join shared by ``simhash_pairs``
-    and ``images.phash_neardup_pairs`` (VERDICT r3 item 3: the hot-
-    band-key guard the engine already applies to shingles and LSH
-    embedding buckets, ``_ngram_jaccard_pairs`` pattern).
+def hamming_bands(df: DataFrame, id_col: str, sig_col: str, bits: int,
+                  max_hamming: int) -> DataFrame:
+    """(id, sig, band, band_key) — one row per (signature, band) for
+    :func:`banded_hamming_pairs`: the ``bits``-bit signature split into
+    ``max_hamming + 1`` bands, so any pair at hamming <= max_hamming
+    agrees exactly on at least one band. One ``posexplode`` per row,
+    so the upstream is read once, not once per band."""
+    n_bands = max_hamming + 1
+    assert bits % n_bands == 0, "band width must divide bits"
+    band_bits = bits // n_bands
+    mask = F.lit((1 << band_bits) - 1)
+    keys = F.array(*[F.shiftright(sig_col, i * band_bits).bitwiseAND(mask)
+                     for i in range(n_bands)])
+    return df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"),
+                     F.posexplode(keys).alias("band", "band_key"))
+
+
+def banded_hamming_pairs(bands: DataFrame, max_hamming: int) -> DataFrame:
+    """pigeonhole-band self-join shared by ``simhash_pairs`` and
+    ``images.phash_neardup_pairs``.
 
     ``bands``: (id, sig, band, band_key) — one row per (signature,
     band). A degenerate corpus (many near-black images, boilerplate
-    docs) can share one band_key across m rows, putting m² candidates
-    on a single reducer. The guard is a per-key count → salt factor
-    for OVERSIZED keys only, but the salt machinery (broadcast salt
-    map + per-row ``explode(sequence(...))`` replication) is only
-    worth paying when a key is actually hot — on healthy data it cost
-    2.1× wall time for nothing (VERDICT r4 item 1). So: persist the
-    band table ONCE (probe + both join sides share one
-    materialization instead of three upstream recomputes — the
-    upstream is a payload decode at 100 TB), run the cheap skew probe
-    (the (band, band_key) domain is ≤ n_bands·2^band_bits keys, so
-    the count is a map-side-combined shuffle of at most a few
-    thousand rows regardless of input size), and BRANCH:
-
-    * no hot key (the common case): plain band-key equi-join — no
-      left join, no salt columns, no generator node in the plan.
-    * hot keys: split the band table on key hotness. Cold keys take
-      the plain join; hot keys take the salted join (side a slices by
-      ``hash(id) % factor``, side b replicates to every salt, join
-      key (band, band_key, salt)). Every pair still meets exactly
-      once per shared band — pairs never cross the hot/cold split
-      because hotness is a property of the KEY — so the output, and
-      the brute-force oracle, is unchanged (tests/test_band_salting).
-
-    The persist is intentionally left for the session: the returned
-    DataFrame is lazy (an unpersist here would run before the caller
-    consumes it), and Spark's cache manager dedupes by canonicalized
-    plan, so repeat calls over the SAME input reuse one bounded
-    entry. Caveat (ADVICE r5): calls over *different* inputs in one
-    long-lived session each add an entry — the storage level is
-    MEMORY_AND_DISK (the DataFrame.persist default), so stale entries
-    spill rather than OOM, and a multi-dataset pipeline should call
-    ``spark.catalog.clearCache()`` (or unpersist after materializing)
-    between datasets. Output (d1, d2, hamming), deduped across bands.
+    docs) can share one band_key across m rows, so the join runs
+    through :func:`salted_self_join` on (band, band_key). Every pair
+    still meets exactly once per shared band, so the output — and the
+    brute-force oracle — is unchanged. Output (d1, d2, hamming),
+    deduped across bands.
     """
-    bands = bands.persist()
-    hot = bands.groupBy("band", "band_key") \
-        .agg(F.count("*").alias("df_n")) \
-        .where(F.col("df_n") > salt_target) \
-        .select("band", "band_key", F.least(
-            F.ceil(F.col("df_n") / F.lit(salt_target)),
-            F.lit(max_salt)).cast("int").alias("salt_factor"))
-
     ham = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-
-    def _pairs(joined: DataFrame) -> DataFrame:
-        return joined.where(ham <= F.lit(max_hamming)) \
-            .select(F.col("a.id").alias("d1"),
-                    F.col("b.id").alias("d2"),
-                    ham.cast("int").alias("hamming"))
-
-    def _plain(side: DataFrame) -> DataFrame:
-        a, b = side.alias("a"), side.alias("b")
-        return _pairs(
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.id") < F.col("b.id"))))
-
-    if hot.isEmpty():      # skew probe: one tiny job on the persisted bands
-        out = _plain(bands)
-    else:
-        hot = hot.persist()
-        bf = bands.join(F.broadcast(hot), ["band", "band_key"], "left")
-        cold = bf.where(F.col("salt_factor").isNull()).drop("salt_factor")
-        hotb = bf.where(F.col("salt_factor").isNotNull())
-        a = hotb.withColumn(
-            "salt", F.pmod(F.hash("id"), F.col("salt_factor"))).alias("a")
-        b = hotb.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0),
-                                         F.col("salt_factor") - F.lit(1)))) \
-            .alias("b")
-        salted = a.join(b, (F.col("a.band") == F.col("b.band"))
-                        & (F.col("a.band_key") == F.col("b.band_key"))
-                        & (F.col("a.salt") == F.col("b.salt"))
-                        & (F.col("a.id") < F.col("b.id")))
-        out = _plain(cold).unionByName(_pairs(salted))
-
-    return out.distinct()
+    return salted_self_join(bands, ["band", "band_key"], "id",
+                            BAND_SALT_TARGET) \
+        .where(ham <= F.lit(max_hamming)) \
+        .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"),
+                ham.cast("int").alias("hamming")) \
+        .distinct()
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str,
@@ -1265,28 +1213,15 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     key, scales): split the 16-bit simhash into ``max_hamming + 1``
     bands; any pair at hamming <= max_hamming differs in at most
     max_hamming bands, so it agrees EXACTLY on at least one band.
-    Candidates = union of per-band equi-joins; the exact
+    Candidates = band-key equi-join matches; the exact
     ``bit_count(xor)`` filter then removes false positives. Output is
     identical to the naive all-pairs theta join (which planned as a
     BroadcastNestedLoop, O(n²) — tests/test_plans.py pins its absence).
     The self-join runs through :func:`banded_hamming_pairs`, so hot
     band keys are salt-spread (output unchanged).
     """
-    sig = simhash(spark, sf_dir)
-    n_bands = max_hamming + 1
-    assert SIMHASH_BITS % n_bands == 0, "band width must divide bits"
-    band_bits = SIMHASH_BITS // n_bands
-    mask = (1 << band_bits) - 1
-    parts = [
-        sig.select(
-            F.col("doc_id").alias("id"), F.col("simhash").alias("sig"),
-            F.lit(i).alias("band"),
-            F.shiftright("simhash", i * band_bits)
-            .bitwiseAND(F.lit(mask)).alias("band_key"))
-        for i in range(n_bands)]
-    bands = parts[0]
-    for p in parts[1:]:
-        bands = bands.unionAll(p)
+    bands = hamming_bands(simhash(spark, sf_dir), "doc_id", "simhash",
+                          SIMHASH_BITS, max_hamming)
     return banded_hamming_pairs(bands, max_hamming)
 
 

@@ -60,8 +60,8 @@ def main() -> None:
         "pip_broadcast (map-side interval stab: ZERO Exchange)",
         qs["pip_broadcast"](spark, SF_DIR)))
     sections.append((
-        "simhash_pairs (pigeonhole-banded: equi-join, no "
-        "BroadcastNestedLoop/Cartesian)",
+        "simhash_pairs (pigeonhole-banded + hot-key salting: join key "
+        "(band, band_key, salt), no BroadcastNestedLoop/Cartesian)",
         qs["simhash_pairs"](spark, SF_DIR)))
     sections.append((
         "embedding_similar_pairs (LSH-bucketed + hot-bucket salting: "
@@ -80,8 +80,9 @@ def main() -> None:
         "mapInPandas encode+stab+verify pass -> per-region agg)",
         qs["image_pip"](spark, SF_DIR)))
     sections.append((
-        "image_phash_neardup (phash pigeonhole banding: band-key "
-        "equi-join over the persisted signature projection)",
+        "image_phash_neardup (phash pigeonhole banding: join key "
+        "(band, band_key, salt) over the checkpointed signature "
+        "projection)",
         qs["image_phash_neardup"](spark, SF_DIR)))
     sections.append((
         "ann_ivfpq (IVF-PQ: coarse-probe equi-join, candidates ranked "

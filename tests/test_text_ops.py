@@ -63,8 +63,8 @@ def test_lang_id_consumers_compile_without_fallback(spark, sf_dir):
 def test_ngram_jaccard_hot_shingle_salted(spark):
     """hot-shingle guard (VERDICT r2 item 6): a shingle shared by m >
     NGRAM_SALT_TARGET docs must still yield each pair exactly once
-    (salting must not duplicate or drop matches), and the salted plan
-    must actually fan the hot key out (salt_factor > 1 path taken)."""
+    (salting must not duplicate or drop matches). That the hot key
+    fans out is pinned by tests/test_salting.py."""
     m = T.NGRAM_SALT_TARGET + 36   # 100 docs share one hot shingle
     rows = [(i, "hot shingle key") for i in range(m)]
     # plus two docs sharing a cold shingle only
@@ -77,10 +77,6 @@ def test_ngram_jaccard_hot_shingle_salted(spark):
     assert len(pairs) == m * (m - 1) // 2 + 1
     assert all(j == 1.0 for j in pairs.values())
     assert (1000, 1001) in pairs
-    # the guard itself engaged: factor for the hot shingle is ceil(m/target)
-    import math
-    expect = min(math.ceil(m / T.NGRAM_SALT_TARGET), T.NGRAM_MAX_SALT)
-    assert expect > 1
 
 
 def test_components_pointer_doubling_long_chain(spark):

@@ -67,8 +67,7 @@ def _dot_ab_sql(a: str, b: str) -> str:
         for i in range(1, DIM + 1))
 
 
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str,
-                        k: int = TOP_K) -> DataFrame:
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """exact top-k cosine neighbors for each query vector (vec_id <
     N_QUERIES), excluding self. Output (query_id, vec_id, rnk)."""
     emb = _emb(spark, sf_dir)
@@ -83,11 +82,11 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str,
     d = d.withColumn("cosine", dot / (F.sqrt(na) * F.sqrt(nb)))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return d.withColumn("rnk", F.row_number().over(w)) \
-        .where(F.col("rnk") <= k) \
+        .where(F.col("rnk") <= TOP_K) \
         .select("query_id", "vec_id", F.col("rnk").cast("int").alias("rnk"))
 
 
-def ann_bruteforce_sql(k: int = TOP_K) -> str:
+def ann_bruteforce_sql() -> str:
     dot = _dot_ab_sql("q.embedding", "e.embedding")
     na = _dot_self_sql("q.embedding")
     nb = _dot_self_sql("e.embedding")
@@ -102,7 +101,7 @@ r AS (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, vec_id) AS rnk
   FROM d)
-SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {k}
+SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {TOP_K}
 """
 
 
@@ -133,8 +132,7 @@ def lsh_buckets_sql() -> str:
     return f"SELECT vec_id, CAST({expr} AS INT) AS bucket FROM embeddings"
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str,
-                 k: int = TOP_K) -> DataFrame:
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approximate top-k: exact cosine ranking restricted to the
     query's LSH bucket (plus Hamming-distance-1 buckets for recall).
     Deterministic — the oracle replicates the same candidate rule."""
@@ -159,11 +157,11 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
     d = d.withColumn("cosine", dot / (F.sqrt(na) * F.sqrt(nb)))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return d.withColumn("rnk", F.row_number().over(w)) \
-        .where(F.col("rnk") <= k) \
+        .where(F.col("rnk") <= TOP_K) \
         .select("query_id", "vec_id", F.col("rnk").cast("int").alias("rnk"))
 
 
-def ann_lsh_sql(k: int = TOP_K) -> str:
+def ann_lsh_sql() -> str:
     dot = _dot_ab_sql("q.embedding", "e.embedding")
     na = _dot_self_sql("q.embedding")
     nb = _dot_self_sql("e.embedding")
@@ -188,11 +186,12 @@ r AS (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, vec_id) AS rnk
   FROM d)
-SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {k}
+SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {TOP_K}
 """
 
 
 EMB_DEDUP_SALT_TARGET = 100_000   # rows per (bucket, salt) slice
+EMB_DEDUP_TAU = 0.2   # cosine at or above which two vectors are near-dups
 
 
 N_IVF_CELLS = 16
@@ -293,21 +292,20 @@ def ivf_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _ivf_cell_udf()(F.col("embedding")).alias("ivf_cell"))
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str,
-                 k: int = TOP_K, nprobe: int = IVF_NPROBE) -> DataFrame:
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approximate top-k: exact cosine ranking restricted to the
-    query's ``nprobe`` nearest IVF cells — deterministic, the oracle
+    query's ``IVF_NPROBE`` nearest IVF cells — deterministic, the oracle
     replicates the same probe rule. Candidate fetch is a cell
     equi-join with the small query side broadcast."""
     emb = _emb(spark, sf_dir)
     b = ivf_buckets(spark, sf_dir)
     embb = emb.join(b, "vec_id")
-    # per-query probe cells: rank centroid dots, take nprobe best —
+    # per-query probe cells: rank centroid dots, take IVF_NPROBE best —
     # nc is the NEGATED index so reverse(array_sort) breaks dot ties
     # by ASCENDING cell index, matching the oracle's ORDER BY d DESC, c
     q = emb.where(F.col("vec_id") < N_QUERIES)
     probes = F.slice(F.reverse(F.array_sort(_ivf_dot_structs())),
-                     1, nprobe)
+                     1, IVF_NPROBE)
     q = q.select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.explode(probes).alias("p")) \
@@ -321,7 +319,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
     d = d.withColumn("cosine", dot / (F.sqrt(na) * F.sqrt(nb)))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return d.withColumn("rnk", F.row_number().over(w)) \
-        .where(F.col("rnk") <= k) \
+        .where(F.col("rnk") <= TOP_K) \
         .select("query_id", "vec_id", F.col("rnk").cast("int").alias("rnk"))
 
 
@@ -329,7 +327,7 @@ def ivf_buckets_sql() -> str:
     return f"SELECT vec_id, {_ivf_cell_sql()} AS ivf_cell FROM embeddings"
 
 
-def ann_ivf_sql(k: int = TOP_K, nprobe: int = IVF_NPROBE) -> str:
+def ann_ivf_sql() -> str:
     cents = ivf_centroids()
     dots = []
     for ci, c in enumerate(cents):
@@ -349,7 +347,7 @@ pr AS (
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY d DESC, c) AS rk
         FROM cd)
-  WHERE rk <= {nprobe}),
+  WHERE rk <= {IVF_NPROBE}),
 d AS (
   SELECT q.vec_id AS query_id, e.vec_id,
          ({dot}) / (sqrt({na}) * sqrt({nb})) AS cosine
@@ -362,14 +360,13 @@ r AS (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, vec_id) AS rnk
   FROM d)
-SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {k}
+SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {TOP_K}
 """
 
 
-def embedding_cosine_dedup(spark: SparkSession, sf_dir: str,
-                           tau: float = 0.2) -> DataFrame:
-    """embedding near-dup pairs: cosine >= tau within LSH probe
-    buckets (bucketed all-pairs instead of a full cross join).
+def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embedding near-dup pairs: cosine >= ``EMB_DEDUP_TAU`` within
+    LSH probe buckets (bucketed all-pairs instead of a full cross join).
 
     Hot-bucket guard (VERDICT r1 item 8): one skewed LSH bucket would
     otherwise put its whole O(m²) pair workload on a single reducer,
@@ -386,11 +383,11 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str,
     return d.select(F.col("a.vec_id").alias("v1"),
                     F.col("b.vec_id").alias("v2"),
                     (dot / (F.sqrt(na) * F.sqrt(nb))).alias("cosine")) \
-        .where(F.col("cosine") >= F.lit(tau)) \
+        .where(F.col("cosine") >= F.lit(EMB_DEDUP_TAU)) \
         .select("v1", "v2", F.round("cosine", 6).alias("cosine"))
 
 
-def embedding_cosine_dedup_sql(tau: float = 0.2) -> str:
+def embedding_cosine_dedup_sql() -> str:
     dot = _dot_ab_sql("a.embedding", "c.embedding")
     na = _dot_self_sql("a.embedding")
     nb = _dot_self_sql("c.embedding")
@@ -401,19 +398,19 @@ SELECT a.vec_id AS v1, c.vec_id AS v2, round({cos}, 6) AS cosine
 FROM embeddings a JOIN b ba ON a.vec_id = ba.vec_id
 JOIN b bc ON TRUE JOIN embeddings c ON c.vec_id = bc.vec_id
 WHERE ba.bucket = bc.bucket AND a.vec_id < c.vec_id
-  AND {cos} >= {tau!r}
+  AND {cos} >= {EMB_DEDUP_TAU!r}
 """
 
 
-def embedding_components(spark: SparkSession, sf_dir: str,
-                         tau: float = 0.2) -> DataFrame:
+def embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """canonical vector per embedding near-dup CLUSTER: connected
-    components over the cosine>=tau pair graph (the dedup step AFTER
-    pair generation — keep rows where vec_id == canonical_id). Reuses
+    components over the cosine >= ``EMB_DEDUP_TAU`` pair graph (the
+    dedup step AFTER pair generation — keep rows where vec_id ==
+    canonical_id). Reuses
     the pointer-doubling min-label engine (``text._components``,
     O(log diameter) rounds). Output (vec_id, canonical_id)."""
     from s2spark.text import _components
-    pairs = embedding_cosine_dedup(spark, sf_dir, tau) \
+    pairs = embedding_cosine_dedup(spark, sf_dir) \
         .select(F.col("v1").alias("d1"), F.col("v2").alias("d2"))
     vecs = _emb(spark, sf_dir).select(
         F.col("vec_id").alias("doc_id")).distinct()
@@ -421,10 +418,10 @@ def embedding_components(spark: SparkSession, sf_dir: str,
         .select(F.col("doc_id").alias("vec_id"), "canonical_id")
 
 
-def embedding_components_sql(tau: float = 0.2) -> str:
+def embedding_components_sql() -> str:
     return f"""
 WITH RECURSIVE p AS MATERIALIZED (
-  SELECT v1, v2 FROM ({embedding_cosine_dedup_sql(tau).strip()})),
+  SELECT v1, v2 FROM ({embedding_cosine_dedup_sql().strip()})),
 edges AS MATERIALIZED (SELECT v1 AS a, v2 AS b FROM p
                        UNION SELECT v2, v1 FROM p),
 vecs AS MATERIALIZED (SELECT DISTINCT vec_id FROM embeddings),
@@ -553,8 +550,7 @@ def pq_codes_sql() -> str:
     return f"SELECT vec_id, ({terms}) AS pq_code FROM embeddings"
 
 
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str,
-                   k: int = TOP_K, nprobe: int = IVF_NPROBE) -> DataFrame:
+def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ approximate top-k — the production ANN shape: coarse
     IVF probe picks candidate cells, then candidates are ranked by
     ASYMMETRIC distance (per-query lookup table × stored 4-bit codes)
@@ -576,7 +572,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str,
     # ordered folds — see _pq_dists_np)
     lut = _pq_lut_udf()(F.col("embedding"))
     probes = F.slice(F.reverse(F.array_sort(_ivf_dot_structs())),
-                     1, nprobe)
+                     1, IVF_NPROBE)
     q = q.select(F.col("vec_id").alias("query_id"),
                  lut.alias("lut"),
                  F.explode(probes).alias("p")) \
@@ -593,11 +589,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str,
     d = d.withColumn("adist", adc)
     w = Window.partitionBy("query_id").orderBy("adist", "vec_id")
     return d.withColumn("rnk", F.row_number().over(w)) \
-        .where(F.col("rnk") <= k) \
+        .where(F.col("rnk") <= TOP_K) \
         .select("query_id", "vec_id", F.col("rnk").cast("int").alias("rnk"))
 
 
-def ann_ivfpq_sql(k: int = TOP_K, nprobe: int = IVF_NPROBE) -> str:
+def ann_ivfpq_sql() -> str:
     cbs = pq_codebooks()
     cents = ivf_centroids()
     # probe cells per query (same rule as ann_ivf_sql)
@@ -635,7 +631,7 @@ pr AS (
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY d DESC, c) AS rk
         FROM cd)
-  WHERE rk <= {nprobe}),
+  WHERE rk <= {IVF_NPROBE}),
 d AS (
   SELECT q.vec_id AS query_id, co.vec_id, ({adc}) AS adist
   FROM embeddings q
@@ -647,23 +643,21 @@ r AS (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY adist, vec_id) AS rnk
   FROM d)
-SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {k}
+SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= {TOP_K}
 """
 
 
-def ann_ivf_recall(spark: SparkSession, sf_dir: str,
-                   k: int = TOP_K) -> DataFrame:
+def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of the IVF approximate search vs the exact brute-force
     ranking — the evaluation op an ANN deployment ships with. Output
     (query_id, n_hits, recall_at_k); pure composition of the two
     already-oracled searches plus one equi-join and an agg."""
-    return _recall_vs_bruteforce(spark, sf_dir,
-                                 ann_ivf_topk(spark, sf_dir, k), k)
+    return _recall_vs_bruteforce(spark, sf_dir, ann_ivf_topk(spark, sf_dir))
 
 
 def _recall_vs_bruteforce(spark: SparkSession, sf_dir: str,
-                          approx: DataFrame, k: int) -> DataFrame:
-    exact = ann_bruteforce_topk(spark, sf_dir, k)
+                          approx: DataFrame) -> DataFrame:
+    exact = ann_bruteforce_topk(spark, sf_dir)
     hits = exact.join(approx, ["query_id", "vec_id"]) \
         .groupBy("query_id").agg(F.count("*").alias("n_hits"))
     q = exact.select("query_id").distinct()
@@ -671,43 +665,35 @@ def _recall_vs_bruteforce(spark: SparkSession, sf_dir: str,
         .select("query_id",
                 F.coalesce("n_hits", F.lit(0)).alias("n_hits")) \
         .withColumn("recall_at_k",
-                    F.round(F.col("n_hits") / F.lit(float(k)), 6))
+                    F.round(F.col("n_hits") / F.lit(float(TOP_K)), 6))
 
 
-def ann_ivfpq_recall(spark: SparkSession, sf_dir: str,
-                     k: int = TOP_K) -> DataFrame:
+def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of IVF-PQ (quantization + probe loss together) vs the
     exact ranking — the end-to-end quality gate of the compressed
     index. Same composition shape as :func:`ann_ivf_recall`."""
     return _recall_vs_bruteforce(spark, sf_dir,
-                                 ann_ivfpq_topk(spark, sf_dir, k), k)
+                                 ann_ivfpq_topk(spark, sf_dir))
 
 
-def ann_ivfpq_recall_sql(k: int = TOP_K) -> str:
+def _recall_sql(approx_sql: str) -> str:
     return f"""
-WITH exact AS ({ann_bruteforce_sql(k).strip()}),
-approx AS ({ann_ivfpq_sql(k).strip()}),
+WITH exact AS ({ann_bruteforce_sql().strip()}),
+approx AS ({approx_sql.strip()}),
 hits AS (
   SELECT exact.query_id, count(*) AS n_hits
   FROM exact JOIN approx USING (query_id, vec_id)
   GROUP BY exact.query_id),
 q AS (SELECT DISTINCT query_id FROM exact)
 SELECT q.query_id, COALESCE(hits.n_hits, 0) AS n_hits,
-       round(COALESCE(hits.n_hits, 0) / {float(k)!r}, 6) AS recall_at_k
+       round(COALESCE(hits.n_hits, 0) / {float(TOP_K)!r}, 6) AS recall_at_k
 FROM q LEFT JOIN hits ON q.query_id = hits.query_id
 """
 
 
-def ann_ivf_recall_sql(k: int = TOP_K) -> str:
-    return f"""
-WITH exact AS ({ann_bruteforce_sql(k).strip()}),
-approx AS ({ann_ivf_sql(k).strip()}),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hits
-  FROM exact JOIN approx USING (query_id, vec_id)
-  GROUP BY exact.query_id),
-q AS (SELECT DISTINCT query_id FROM exact)
-SELECT q.query_id, COALESCE(hits.n_hits, 0) AS n_hits,
-       round(COALESCE(hits.n_hits, 0) / {float(k)!r}, 6) AS recall_at_k
-FROM q LEFT JOIN hits ON q.query_id = hits.query_id
-"""
+def ann_ivfpq_recall_sql() -> str:
+    return _recall_sql(ann_ivfpq_sql())
+
+
+def ann_ivf_recall_sql() -> str:
+    return _recall_sql(ann_ivf_sql())

@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from s2spark.kernels import hilbert
+from s2spark.kernels import cellops, hilbert
 
 MAX_LEVEL = 30
 SIGN_BIT = -0x8000000000000000  # int64 min == 1 << 63 as a bit pattern
@@ -275,8 +275,8 @@ def leaf_bounds(df: DataFrame, n: int, cell_col: str) -> list[int]:
     a = np.array(rows, dtype=np.float64 if len(cols) == 2 else np.int64) \
         .reshape(-1, len(cols))
     ids = hilbert.lat_lng_to_cell_id(a[:, 0], a[:, 1]) if len(cols) == 2 \
-        else a[:, 0].view(np.uint64)
-    s = np.sort((ids ^ np.uint64(1 << 63)).view(np.int64))
+        else a[:, 0]
+    s = np.sort(cellops.sortable(ids))
     if not len(s):
         return []
     return np.unique(s[np.arange(1, n) * len(s) // n]).tolist()

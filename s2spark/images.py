@@ -318,8 +318,7 @@ PHASH_HAMMING_MAX = 7   # 8 bands of 8 bits (pigeonhole: <=7 diffs
 #                         leave at least one band identical)
 
 
-def phash_neardup_pairs(images: DataFrame,
-                        max_hamming: int = PHASH_HAMMING_MAX) -> DataFrame:
+def phash_neardup_pairs(images: DataFrame) -> DataFrame:
     """near-duplicate IMAGE pairs by perceptual-hash hamming distance
     — the multimodal twin of ``text.simhash_pairs`` and the core
     image-dedup op of a training-data pipeline (the graft axis's
@@ -327,31 +326,29 @@ def phash_neardup_pairs(images: DataFrame,
     within a few phash bits of each other.
 
     Same pigeonhole banding (scale path, no all-pairs): split the
-    64-bit phash into ``max_hamming + 1`` bands; any pair at hamming
-    <= max_hamming agrees exactly on at least one band, so the join
-    is a band-key EQUI-join + exact ``bit_count`` filter — through
-    :func:`text.banded_hamming_pairs`, so hot band keys (a corpus of
-    near-black images sharing a phash band) are salt-spread across
-    reducers with the output unchanged.
+    64-bit phash into ``PHASH_HAMMING_MAX + 1`` bands; any pair at
+    hamming <= PHASH_HAMMING_MAX agrees exactly on at least one band,
+    so the join is a band-key EQUI-join + exact ``bit_count`` filter —
+    through :func:`text.banded_hamming_pairs`, so hot band keys (a
+    corpus of near-black images sharing a phash band) are
+    salt-spread across reducers with the output unchanged.
     Output (i1, i2, hamming), deduped across bands.
     """
     # materialize the thin (id, phash) projection once: the salted band
     # self-join reads it several times, and each read would re-run the
     # Python upstream (payload decode at 100 TB; synth generation here)
     sig = images.select("image_id", "phash").localCheckpoint()
-    return _phash_pairs_from_sig(sig, max_hamming)
+    return _phash_pairs_from_sig(sig)
 
 
-def _phash_pairs_from_sig(sig: DataFrame,
-                          max_hamming: int = PHASH_HAMMING_MAX
-                          ) -> DataFrame:
+def _phash_pairs_from_sig(sig: DataFrame) -> DataFrame:
     """core of :func:`phash_neardup_pairs` over a prebuilt (and
     materialized) (image_id, phash) projection — split out so
     :func:`image_components` can share ONE projection with the pair
     generation instead of re-running the upstream per scan."""
     from s2spark.text import banded_hamming_pairs, hamming_bands
-    bands = hamming_bands(sig, "image_id", "phash", 64, max_hamming)
-    return banded_hamming_pairs(bands, max_hamming) \
+    bands = hamming_bands(sig, "image_id", "phash", 64, PHASH_HAMMING_MAX)
+    return banded_hamming_pairs(bands, PHASH_HAMMING_MAX) \
         .select(F.col("d1").alias("i1"), F.col("d2").alias("i2"),
                 "hamming")
 
@@ -360,8 +357,6 @@ MM_TEMPLATE_CAP = 25   # max images kept per caption template
 
 
 def multimodal_dedup(images: DataFrame,
-                     per_template_cap: int = MM_TEMPLATE_CAP,
-                     components: DataFrame | None = None,
                      id_bounds: tuple[int, int] | None = None
                      ) -> DataFrame:
     """CROSS-MODAL curation — the image+caption joint dedup a
@@ -384,9 +379,7 @@ def multimodal_dedup(images: DataFrame,
     to the string order) and reassembles the EXACT global rank from
     local ranks + cumulative bucket counts — same output, no
     single-reducer sort. Output (image_id, canonical_id, tpl_hash,
-    tpl_rank, keep). ``components`` lets a caller that already
-    materialized :func:`image_components` compose instead of
-    recomputing (VERDICT r4 item 6).
+    tpl_rank, keep).
     """
     from s2spark.text import md5_int64
     from s2spark.windows import bucketed_row_number
@@ -397,8 +390,7 @@ def multimodal_dedup(images: DataFrame,
     # bucketed_row_number, skipping its min/max probe job
     # (stale/clamped bounds are rank-exact, tests pin it).
     base = images.select("image_id", "phash", "caption").localCheckpoint()
-    comp = (components if components is not None
-            else _components_from_sig(base))
+    comp = _components_from_sig(base)
     tpl = F.regexp_replace("caption", "[0-9]+", "#")
     cap = base.select("image_id", md5_int64(tpl).alias("tpl_hash"))
     # coalesce the surrogate: an id with no digits yields NULL here and
@@ -412,7 +404,7 @@ def multimodal_dedup(images: DataFrame,
     return comp.join(cap, "image_id").select(
         "image_id", "canonical_id", "tpl_hash", "tpl_rank",
         ((F.col("image_id") == F.col("canonical_id"))
-         & (F.col("tpl_rank") <= F.lit(per_template_cap))).alias("keep"))
+         & (F.col("tpl_rank") <= F.lit(MM_TEMPLATE_CAP))).alias("keep"))
 
 
 def image_tile_stats(images: DataFrame, level: int = 8) -> DataFrame:
@@ -427,35 +419,26 @@ def image_tile_stats(images: DataFrame, level: int = 8) -> DataFrame:
              F.approx_count_distinct("phash").alias("phash_approx_distinct"))
 
 
-def image_components(images: DataFrame,
-                     max_hamming: int = PHASH_HAMMING_MAX,
-                     pairs: DataFrame | None = None) -> DataFrame:
+def image_components(images: DataFrame) -> DataFrame:
     """canonical image per phash-near-dup CLUSTER — the image-side
     twin of ``text.dedup_components``: connected components over the
     banded hamming pair graph via the shared pointer-doubling
     min-label engine (string ids order lexicographically; the fixed-
     width ``img%012d`` ids make that identical to numeric order).
-    ``pairs`` lets a caller that already materialized
-    :func:`phash_neardup_pairs` (i1, i2[, hamming]) compose instead
-    of recomputing (VERDICT r4 item 6). Output (image_id,
-    canonical_id)."""
+    Output (image_id, canonical_id)."""
     # ONE materialized (image_id, phash) projection feeds the pair
     # generation AND the id universe, so the full upstream
     # (payload decode at 100 TB; synth generation here) runs once.
     return _components_from_sig(
-        images.select("image_id", "phash").localCheckpoint(),
-        max_hamming, pairs)
+        images.select("image_id", "phash").localCheckpoint())
 
 
-def _components_from_sig(sig: DataFrame, max_hamming: int = PHASH_HAMMING_MAX,
-                         pairs: DataFrame | None = None) -> DataFrame:
+def _components_from_sig(sig: DataFrame) -> DataFrame:
     """core of :func:`image_components` over a materialized projection
     holding (image_id, phash)."""
     from s2spark.text import _components
-    if pairs is None:
-        pairs = _phash_pairs_from_sig(sig, max_hamming)
-    pairs = pairs.select(F.col("i1").alias("d1"),
-                         F.col("i2").alias("d2"))
+    pairs = _phash_pairs_from_sig(sig).select(F.col("i1").alias("d1"),
+                                              F.col("i2").alias("d2"))
     ids = sig.select(F.col("image_id").alias("doc_id")).distinct()
     return _components(ids, pairs) \
         .select(F.col("doc_id").alias("image_id"), "canonical_id")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from s2spark import columns as CC
+from s2spark.kernels.cellops import sortable_int
 
 MANIFEST = "_s2spark_manifest.json"
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -219,9 +220,8 @@ CELL_SORT_COL = "cell_sort"
 LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
-                    num_files: int = 16) -> None:
-    """write a dataset Hilbert-CLUSTERED on its cell id (SURVEY §4.3):
+def write_clustered(df: DataFrame, path: str, num_files: int = 16) -> None:
+    """write a dataset Hilbert-CLUSTERED on its ``cell_id`` (SURVEY §4.3):
     a materialized ``cell_sort`` column (uint64-order ``sortable``,
     CLAUDE.md signedness discipline) is range-partitioned across files
     (``repartitionById`` on a :func:`columns.range_id` over
@@ -236,9 +236,9 @@ def write_clustered(df: DataFrame, path: str, cell_col: str = "cell_id",
     parquet reader, and :func:`scan_cell_ranges` skips whole files by
     their footer spans. Pruning is pinned empirically in
     tests/test_storage_pruning.py."""
-    bounds = CC.leaf_bounds(df, num_files, cell_col)
-    df.withColumn(CELL_SORT_COL, CC.sortable(cell_col)) \
-        .repartitionById(num_files, CC.range_id(cell_col, bounds)) \
+    bounds = CC.leaf_bounds(df, num_files, "cell_id")
+    df.withColumn(CELL_SORT_COL, CC.sortable("cell_id")) \
+        .repartitionById(num_files, CC.range_id("cell_id", bounds)) \
         .sortWithinPartitions(CELL_SORT_COL) \
         .write.mode("overwrite").parquet(path)
 
@@ -280,13 +280,7 @@ def scan_cell_ranges(spark: SparkSession, path: str,
     The predicate is ONE SQL string: a Column-object chain costs
     several py4j calls per BETWEEN. An empty covering matches nothing
     and returns an empty DataFrame with the table's schema."""
-
-    def _sortable_scalar(x: int) -> int:
-        u = (int(x) ^ (1 << 63)) & ((1 << 64) - 1)
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    bounds = [(_sortable_scalar(lo), _sortable_scalar(hi))
-              for lo, hi in ranges]
+    bounds = [(sortable_int(lo), sortable_int(hi)) for lo, hi in ranges]
     pred = " OR ".join(f"{CELL_SORT_COL} BETWEEN {lo}L AND {hi}L"
                        for lo, hi in bounds)
     files = _data_files(path)

@@ -57,6 +57,7 @@ from s2spark.geometry import (
 )
 from s2spark.kernels import hilbert
 from s2spark.kernels import regions as RK
+from s2spark.kernels.cellops import sortable, sortable_int
 
 SIGN = 1 << 63
 BUCKET_LEVEL = 8  # cell-id prefix level both bucket-join sides key on
@@ -65,20 +66,12 @@ BUCKET_LEVEL = 8  # cell-id prefix level both bucket-join sides key on
 BROADCAST_COVERING_LIMIT = 5_000_000
 
 
-def _sortable(u: int) -> int:
-    """uint64 python int -> order-preserving signed int64.
-
-    XOR with the sign bit, reinterpreted signed, is u - 2^63 for all u.
-    """
-    return u - SIGN
-
-
 # ---------------------------------------------------------------------------
 # covering construction
 # ---------------------------------------------------------------------------
 
-def compute_coverings(regions: dict[int, object], max_cells: int = 256,
-                      max_level: int = 30) -> list[tuple]:
+def compute_coverings(regions: dict[int, object],
+                      max_cells: int = 256) -> list[tuple]:
     """(region_id, cell_id, interior) rows for every covering cell.
 
     ``interior`` is exact (``region.contains(cell)``): matches on
@@ -87,7 +80,7 @@ def compute_coverings(regions: dict[int, object], max_cells: int = 256,
     max_cells budget tightens boundaries — fewer exact verifies per
     matched row — while the exploded covering stays broadcastable.
     """
-    coverer = RegionCoverer(max_cells=max_cells, max_level=max_level)
+    coverer = RegionCoverer(max_cells=max_cells)
     rows = []
     for rid, region in regions.items():
         for cid in coverer.get_covering(region).ids:
@@ -97,8 +90,8 @@ def compute_coverings(regions: dict[int, object], max_cells: int = 256,
 
 def build_interval_index(covering_rows: list[tuple]) -> RK.IntervalIndex:
     """covering rows -> CSR stabbing index over sortable leaf ranges."""
-    starts = [_sortable(cid_range_min(cid)) for _, cid, _ in covering_rows]
-    ends = [_sortable(cid_range_max(cid)) for _, cid, _ in covering_rows]
+    starts = [sortable_int(cid_range_min(cid)) for _, cid, _ in covering_rows]
+    ends = [sortable_int(cid_range_max(cid)) for _, cid, _ in covering_rows]
     rids = [rid for rid, _, _ in covering_rows]
     interior = [i for _, _, i in covering_rows]
     return RK.IntervalIndex(starts, ends, rids, interior)
@@ -130,8 +123,8 @@ def coverings_df(spark: SparkSession, covering_rows: list[tuple],
         return hit
     out = []
     for rid, cid, interior in covering_rows:
-        rmin_s = _sortable(cid_range_min(cid))
-        rmax_s = _sortable(cid_range_max(cid))
+        rmin_s = sortable_int(cid_range_min(cid))
+        rmax_s = sortable_int(cid_range_max(cid))
         cid_s = (cid ^ SIGN) - SIGN if cid & SIGN else cid
         if cid_level(cid) >= bucket_level:
             buckets = [cid_parent(cid, bucket_level)]
@@ -241,8 +234,7 @@ def pip_join_broadcast(points: DataFrame,
             lat = pdf["lat"].to_numpy(np.float64)
             lng = pdf["lng"].to_numpy(np.float64)
             leaf = hilbert.lat_lng_to_cell_id(lat, lng)
-            leaf_s = (leaf ^ np.uint64(SIGN)).view(np.int64)
-            rows, rids, interior = index.stab(leaf_s)
+            rows, rids, interior = index.stab(sortable(leaf))
             if len(rids) == 0:
                 continue
             keep = interior.copy()
@@ -275,11 +267,9 @@ def with_cell_id(points: DataFrame) -> DataFrame:
 
 def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
                       params_by_region: dict[int, tuple[str, list[float]]],
-                      bucket_level: int = BUCKET_LEVEL,
-                      broadcast_covering: bool = True,
-                      extra_cols: tuple[str, ...] = (),
-                      emit_cell_id: bool = False) -> DataFrame:
-    """point-in-region as a Catalyst-native bucket equi-join.
+                      broadcast_covering: bool = True) -> DataFrame:
+    """point-in-region as a Catalyst-native bucket equi-join. Output:
+    (region_id, point_id).
 
     One scalar-UDF encode pass (narrow columns through Arrow), then
     JVM-side bucket prefix via codegen bit math, an equi-join against
@@ -293,11 +283,11 @@ def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
     copies the covering slice it joins against — from the actual
     shuffle sizes, with no sample pass.
 
-    ``cov_df`` must be built with the same ``bucket_level``
-    (:func:`coverings_df`).
+    ``cov_df`` must be built at :data:`BUCKET_LEVEL`
+    (:func:`coverings_df`'s default).
     """
     pts = points if "cell_id" in points.columns else with_cell_id(points)
-    pts = pts.withColumn("_bucket", CC.parent("cell_id", bucket_level)) \
+    pts = pts.withColumn("_bucket", CC.parent("cell_id", BUCKET_LEVEL)) \
              .withColumn("_leaf_s", CC.sortable("cell_id"))
     cov = F.broadcast(cov_df) if broadcast_covering else cov_df.hint("merge")
     joined = pts.join(
@@ -311,11 +301,7 @@ def pip_join_bucketed(points: DataFrame, cov_df: DataFrame,
     verify = make_verify_udf(params_by_region)
     accepted = joined.where(
         verify("region_id", "lat", "lng", "interior"))
-    cols = [F.col("region_id"), pts["point_id"]]
-    cols += [pts[c] for c in extra_cols]
-    if emit_cell_id:
-        cols.append(pts["cell_id"])
-    return accepted.select(*cols)
+    return accepted.select(F.col("region_id"), pts["point_id"])
 
 
 def pip_join(points: DataFrame, covering_rows: list[tuple],
@@ -342,8 +328,8 @@ def pip_semi(points: DataFrame, covering_rows, params_by_region,
 
 
 def cell_containment_join(cells: DataFrame, container: DataFrame,
-                          container_levels: list[int] | None = None,
-                          how: str = "left_semi") -> DataFrame:
+                          container_levels: list[int] | None = None
+                          ) -> DataFrame:
     """rows of ``cells`` whose cell_id is contained in ANY cell of
     ``container`` — the distributed ``CellUnion.contains`` /
     covering∩covering primitive (SURVEY §2.5 cell-interval joins,
@@ -358,8 +344,8 @@ def cell_containment_join(cells: DataFrame, container: DataFrame,
     Multiplicity: with a NORMALIZED container set (disjoint cells, the
     CellUnion invariant) each contained cell matches exactly one level.
     For arbitrary containers holding nested cells at several levels, a
-    cell could match more than one union arm, so the left_semi form
-    dedupes across arms (``distinct``) to keep "contained in ANY"
+    cell could match more than one union arm, so the union dedupes
+    across arms (``distinct``) to keep "contained in ANY"
     set semantics; callers needing input multiplicity must pass
     normalized containers. ``container_levels=None`` triggers a small
     driver collect of the distinct levels (bounded ≤ 31) — pass it
@@ -375,11 +361,11 @@ def cell_containment_join(cells: DataFrame, container: DataFrame,
         snapped = cells.where(CC.level("cell_id") >= lvl).join(
             F.broadcast(side),
             CC.parent(cells["cell_id"], lvl) == F.col("_container"),
-            how)
+            "left_semi")
         out = snapped if out is None else out.unionAll(snapped)
     if out is None:
         return cells.limit(0)
-    if how == "left_semi" and len(container_levels) > 1:
+    if len(container_levels) > 1:
         out = out.distinct()
     return out
 
@@ -416,14 +402,13 @@ def knn_auto_level(n_points: int, k_max: int) -> int:
 
 def knn_join(spark: SparkSession, points: DataFrame,
              queries: list[tuple[int, float, float, int]],
-             level: int | None = 6, max_rings: int = 64) -> DataFrame:
+             level: int | None = 6) -> DataFrame:
     """exact k nearest points per query — small-list convenience API.
 
     Thin shim over :func:`knn_join_df`: the query list becomes a
     4-column DataFrame (query_id, lat, lng, k) and the DataFrame path
-    ranks it, honoring the per-query ``k`` column. ``max_rings`` caps
-    the opening disk. Output: (query_id, point_id, rnk) with
-    (dist2, point_id) ties.
+    ranks it, honoring the per-query ``k`` column. Output: (query_id,
+    point_id, rnk) with (dist2, point_id) ties.
     """
     if level is None:
         level = knn_auto_level(points.count(),
@@ -435,8 +420,7 @@ def knn_join(spark: SparkSession, points: DataFrame,
     # a small query set pays driver latency, not candidate volume: open
     # with 3 rings so pass 1 usually certifies every query (r5 measured
     # 3 rings faster than 1 even at 6k queries x 600k points)
-    return knn_join_df(points, q, level=level, max_rounds=max_rings,
-                       init_rings=3)
+    return knn_join_df(points, q, level=level, init_rings=3)
 
 
 def knn_join_df(points: DataFrame, queries: DataFrame,
@@ -604,8 +588,7 @@ def knn_join_df(points: DataFrame, queries: DataFrame,
     return out
 
 
-def distance_join(points: DataFrame, radius_rad: float,
-                  level: int | None = None) -> DataFrame:
+def distance_join(points: DataFrame, radius_rad: float) -> DataFrame:
     """within-distance SELF-join: all pairs (p1 < p2) of points within
     great-circle angle ``radius_rad`` — the co-location primitive.
 
@@ -620,8 +603,7 @@ def distance_join(points: DataFrame, radius_rad: float,
     """
     from s2spark.udfs import s2_neighbors_udf
 
-    if level is None:
-        level = max(0, min(30, metrics.MIN_WIDTH.get_max_level(radius_rad)))
+    level = max(0, min(30, metrics.MIN_WIDTH.get_max_level(radius_rad)))
     thresh = 2.0 * np.sin(0.5 * radius_rad)
     thresh2 = thresh * thresh
     pts = points if "cell_id" in points.columns else with_cell_id(points)

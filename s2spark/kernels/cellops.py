@@ -28,10 +28,23 @@ from s2spark.kernels.hilbert import (
 )
 
 _U = np.uint64
+_SIGN = 1 << 63
 
 
 def _as_u64(cell_id) -> np.ndarray:
     return np.asarray(cell_id).astype(np.uint64)
+
+
+def sortable_int(cell_id: int) -> int:
+    """one id, given as a uint64 or as its signed int64 view -> the
+    order-preserving int64 of ``columns.sortable`` (sign bit flipped,
+    read signed; for a uint64 ``u`` that is ``u - 2^63``)."""
+    return (int(cell_id) & (2 * _SIGN - 1)) - _SIGN
+
+
+def sortable(cell_id: np.ndarray) -> np.ndarray:
+    """array twin of :func:`sortable_int` over a uint64 or int64 array."""
+    return (np.asarray(cell_id).view(_U) ^ _U(_SIGN)).view(np.int64)
 
 
 def lsb(cell_id) -> np.ndarray:

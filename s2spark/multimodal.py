@@ -30,6 +30,10 @@ AUDIO_FEATURES_SCHEMA = ("audio_id string, caption string, duration_sec "
 VIDEO_FRAMES_SCHEMA = ("video_id string, frame_idx long, ts_sec double, "
                        "mean_px double")
 
+AUDIO_SAMPLE_RATE = 8000     # Hz of the synthetic pcm16 clips
+AUDIO_WINDOW_SAMPLES = 400   # samples per energy window
+FRAME_EVERY_N = 5            # keep every Nth video frame
+
 
 def _decode_audio(data: bytes, codec: str, n_samples: int) -> np.ndarray:
     """pcm16 little-endian decodes for real; everything else is a
@@ -43,8 +47,7 @@ def _decode_audio(data: bytes, codec: str, n_samples: int) -> np.ndarray:
         "codecs")
 
 
-def synth_audio(spark: SparkSession, n: int,
-                sample_rate: int = 8000) -> DataFrame:
+def synth_audio(spark: SparkSession, n: int) -> DataFrame:
     """deterministic pcm16 clips generated on executors."""
 
     def _gen(batches):
@@ -54,9 +57,9 @@ def synth_audio(spark: SparkSession, n: int,
                 n_samples = 800 + (idx % 5) * 400
                 t = np.arange(n_samples)
                 wave = (np.sin(2 * np.pi * (110 + idx % 440) * t
-                               / sample_rate) * 0.5 * 32767)
+                               / AUDIO_SAMPLE_RATE) * 0.5 * 32767)
                 data = wave.astype("<i2").tobytes()
-                rows.append((f"aud{idx:09d}", data, sample_rate,
+                rows.append((f"aud{idx:09d}", data, AUDIO_SAMPLE_RATE,
                              n_samples, 1, "pcm16",
                              f"audio caption {idx}"))
             yield pd.DataFrame(rows, columns=[
@@ -66,8 +69,7 @@ def synth_audio(spark: SparkSession, n: int,
     return spark.range(n).mapInPandas(_gen, AUDIO_SCHEMA)
 
 
-def audio_features(audio: DataFrame,
-                   window_samples: int = 400) -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """windowed energy + REAL spectral features (decode → frame →
     reduce → rFFT): dominant frequency (argmax magnitude bin) and
     spectral centroid — numpy DSP, no stub. Tests pin the dominant
@@ -79,9 +81,9 @@ def audio_features(audio: DataFrame,
             out = []
             for row in pdf.itertuples(index=False):
                 sig = _decode_audio(row.bytes, row.codec, row.n_samples)
-                n_win = len(sig) // window_samples
-                w = sig[:n_win * window_samples] \
-                    .reshape(n_win, window_samples)
+                n_win = len(sig) // AUDIO_WINDOW_SAMPLES
+                w = sig[:n_win * AUDIO_WINDOW_SAMPLES] \
+                    .reshape(n_win, AUDIO_WINDOW_SAMPLES)
                 energy = (w * w).mean(axis=1)
                 spec = np.abs(np.fft.rfft(sig))
                 freqs = np.fft.rfftfreq(len(sig), d=1.0 / row.sample_rate)
@@ -126,10 +128,11 @@ def synth_video(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(n).mapInPandas(_gen, VIDEO_SCHEMA)
 
 
-def sample_frames(video: DataFrame, every_n: int = 5) -> DataFrame:
-    """frame sampling (decode → select every Nth frame → per-frame
-    stats). For codec='rawgray' the decode is a reshape; real codecs
-    raise NotImplementedError with identical plumbing."""
+def sample_frames(video: DataFrame) -> DataFrame:
+    """frame sampling (decode → keep frames 0, N, 2N, … for N =
+    ``FRAME_EVERY_N`` → per-frame stats). For codec='rawgray' the
+    decode is a reshape; real codecs raise NotImplementedError with
+    identical plumbing."""
 
     def _frames(batches):
         for pdf in batches:
@@ -140,7 +143,7 @@ def sample_frames(video: DataFrame, every_n: int = 5) -> DataFrame:
                         f"video codec {row.codec!r} needs a decoder")
                 frames = np.frombuffer(row.bytes, dtype=np.uint8) \
                     .reshape(row.n_frames, row.h, row.w)
-                for fi in range(0, row.n_frames, every_n):
+                for fi in range(0, row.n_frames, FRAME_EVERY_N):
                     out.append((row.video_id, fi, fi / row.fps,
                                 float(frames[fi].mean())))
             yield pd.DataFrame(out, columns=[

@@ -23,17 +23,18 @@ from pyspark.sql import functions as F
 from s2spark import columns as CC
 
 HLL_LG_K = 14   # Datasketches lgConfigK: 2^14 buckets, ~1.2% rse
+FINE_LEVEL = 8     # the tile level sketched from the fact table
+COARSE_LEVEL = 4   # the tile level rolled up from the fine sketches
 
 
-def tile_distinct_rollup(df: DataFrame, cell_col: str, value_col: str,
-                         fine_level: int = 8, coarse_level: int = 4,
-                         lg_k: int = HLL_LG_K) -> DataFrame:
+def tile_distinct_rollup(df: DataFrame, cell_col: str,
+                         value_col: str) -> DataFrame:
     """per-COARSE-tile row count + approximate distinct ``value_col``,
     where the coarse sketches are the HLL UNION of the per-fine-tile
     sketches (one fact-table pass total). Output (tile_token, n_rows,
     distinct_est) at the coarse level, plus the fine-level rows the
     union consumed — callers slice by ``level``."""
-    fine = df.select(CC.parent(cell_col, fine_level).alias("tile_f"),
+    fine = df.select(CC.parent(cell_col, FINE_LEVEL).alias("tile_f"),
                      F.col(value_col).alias("v"))
     # ONE fact-table pass: both output levels and the union read the
     # per-fine-tile sketch table, which is persisted (it is |fine
@@ -41,44 +42,43 @@ def tile_distinct_rollup(df: DataFrame, cell_col: str, value_col: str,
     # Spark's cache manager dedupes repeat calls by canonicalized
     # plan, same discipline as images.phash_neardup_pairs).
     fsk = fine.groupBy("tile_f").agg(
-        F.hll_sketch_agg("v", F.lit(lg_k)).alias("sk"),
+        F.hll_sketch_agg("v", F.lit(HLL_LG_K)).alias("sk"),
         F.count("*").alias("n_rows")).persist()
     coarse = fsk.groupBy(
-        CC.parent("tile_f", coarse_level).alias("tile_c")) \
+        CC.parent("tile_f", COARSE_LEVEL).alias("tile_c")) \
         .agg(F.hll_union_agg("sk").alias("sk"),
              F.sum("n_rows").alias("n_rows"))
     out_f = fsk.select(
-        F.lit(fine_level).alias("level"), CC.token("tile_f").alias("tile_token"),
+        F.lit(FINE_LEVEL).alias("level"), CC.token("tile_f").alias("tile_token"),
         F.col("n_rows").cast("long").alias("n_rows"),
         F.hll_sketch_estimate("sk").cast("long").alias("distinct_est"))
     out_c = coarse.select(
-        F.lit(coarse_level).alias("level"), CC.token("tile_c").alias("tile_token"),
+        F.lit(COARSE_LEVEL).alias("level"), CC.token("tile_c").alias("tile_token"),
         F.col("n_rows").cast("long").alias("n_rows"),
         F.hll_sketch_estimate("sk").cast("long").alias("distinct_est"))
     return out_c.unionByName(out_f)
 
 
 def tile_distinct_rollup_exact(df: DataFrame, cell_col: str,
-                               value_col: str, fine_level: int = 8,
-                               coarse_level: int = 4) -> DataFrame:
+                               value_col: str) -> DataFrame:
     """the exact twin: same output shape with true count_distinct per
     level — the SQL-oracled gate the sketch variant is graded
     against (and the plan a 100 TB run would NOT want: one full
     (tile, value) shuffle per level)."""
-    fine = df.select(CC.parent(cell_col, fine_level).alias("tile_f"),
+    fine = df.select(CC.parent(cell_col, FINE_LEVEL).alias("tile_f"),
                      F.col(value_col).alias("v"))
     out_f = fine.groupBy("tile_f").agg(
         F.count("*").alias("n_rows"),
         F.count_distinct("v").alias("distinct_est")) \
-        .select(F.lit(fine_level).alias("level"),
+        .select(F.lit(FINE_LEVEL).alias("level"),
                 CC.token("tile_f").alias("tile_token"),
                 F.col("n_rows").cast("long").alias("n_rows"),
                 F.col("distinct_est").cast("long").alias("distinct_est"))
     out_c = fine.groupBy(
-        CC.parent("tile_f", coarse_level).alias("tile_c")) \
+        CC.parent("tile_f", COARSE_LEVEL).alias("tile_c")) \
         .agg(F.count("*").alias("n_rows"),
              F.count_distinct("v").alias("distinct_est")) \
-        .select(F.lit(coarse_level).alias("level"),
+        .select(F.lit(COARSE_LEVEL).alias("level"),
                 CC.token("tile_c").alias("tile_token"),
                 F.col("n_rows").cast("long").alias("n_rows"),
                 F.col("distinct_est").cast("long").alias("distinct_est"))

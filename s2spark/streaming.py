@@ -19,6 +19,12 @@ from s2spark.udfs import s2_cell_id
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
 
+WATERMARK = "30 minutes"       # late-data horizon of the tile windows
+SESSION_GAP = "30 minutes"     # inactivity gap that closes a session
+USER_SKETCH_LG_K = 12          # HLL lgConfigK of the per-tile user sketch
+DEDUP_WATERMARK = "1 hour"     # replay horizon of the streaming dedup
+STATEFUL_TILE_LEVEL = 2        # tile level of the running totals
+
 
 def geo_events(events: DataFrame, level: int = 8) -> DataFrame:
     """derive deterministic lat/lng for the demo (events carry no geo)
@@ -37,34 +43,43 @@ def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
 
 
-def windowed_tile_counts(events: DataFrame,
-                         watermark: str = "30 minutes") -> DataFrame:
+def read_events_per_file(spark: SparkSession, events_dir: str) -> DataFrame:
+    """the events stream one input FILE per micro-batch, so state must
+    carry across batches."""
+    return spark.readStream.schema(EVENTS_SCHEMA) \
+        .option("maxFilesPerTrigger", "1").parquet(events_dir)
+
+
+def run_to_memory(stream: DataFrame, name: str, mode: str) -> DataFrame:
+    """drain ``stream`` (availableNow) into the memory sink ``name`` in
+    output ``mode``; returns the sink table.
+
+    TEST-ONLY runner (ADVICE r5): outputMode('complete') keeps every
+    window ever seen in the memory sink, so total state grows with the
+    window count even though per-group state is bounded. A production
+    deployment should use append/update mode so the watermark actually
+    evicts closed windows."""
+    q = stream.writeStream.format("memory").queryName(name) \
+        .outputMode(mode).trigger(availableNow=True).start()
+    q.awaitTermination()
+    return stream.sparkSession.table(name)
+
+
+def windowed_tile_counts(events: DataFrame) -> DataFrame:
     """per-(window, tile) event counts with late-data watermark; works
     on both a batch and a streaming DataFrame."""
     df = geo_events(events)
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", WATERMARK)
     return df.groupBy(F.window("ts", "10 minutes").start.alias("win_start"),
                       "tile_token") \
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 2).alias("sum_value"))
 
 
-def run_stream_to_memory(spark: SparkSession, events_dir: str,
-                         name: str = "tile_counts") -> DataFrame:
-    """process all available input (availableNow) into a memory sink;
-    returns the sink table."""
-    q = windowed_tile_counts(read_events_stream(spark, events_dir)) \
-        .writeStream.format("memory").queryName(name) \
-        .outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def user_sessions(events: DataFrame,
-                  gap: str = "30 minutes") -> DataFrame:
+def user_sessions(events: DataFrame) -> DataFrame:
     """SESSION WINDOWS (SURVEY §2.10): per-user sessions that merge
-    events within ``gap`` of each other — Spark's native
+    events within ``SESSION_GAP`` of each other — Spark's native
     ``session_window`` on both batch and streaming DataFrames, the
     streaming twin of the batch gaps-and-islands query
     (``__spark_entry__._q_event_sessions``, DuckDB-oracled). Output:
@@ -72,8 +87,8 @@ def user_sessions(events: DataFrame,
     last event + gap per session_window semantics."""
     df = events
     if df.isStreaming:
-        df = df.withWatermark("ts", gap)
-    return df.groupBy(F.session_window("ts", gap).alias("sw"),
+        df = df.withWatermark("ts", SESSION_GAP)
+    return df.groupBy(F.session_window("ts", SESSION_GAP).alias("sw"),
                       "user_id") \
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 2).alias("sum_value")) \
@@ -82,14 +97,12 @@ def user_sessions(events: DataFrame,
                 "sum_value")
 
 
-def windowed_tile_user_sketch(events: DataFrame,
-                              watermark: str = "30 minutes",
-                              lg_k: int = 12) -> DataFrame:
+def windowed_tile_user_sketch(events: DataFrame) -> DataFrame:
     """per-(window, tile) APPROXIMATE distinct users via HLL sketches
     — the streaming twin of ``sketches.tile_distinct_rollup`` (r5):
     ``hll_sketch_agg`` is a mergeable typed aggregate, so it runs
     inside a watermarked streaming aggregation with bounded state
-    (2^lg_k registers per open (window, tile) group) where an exact
+    (2^USER_SKETCH_LG_K registers per open (window, tile) group) where an exact
     count_distinct would need unbounded per-group key state. HLL
     register maxima are order- and partitioning-independent, so the
     stream result is bit-equal to the batch run (pinned in
@@ -97,49 +110,24 @@ def windowed_tile_user_sketch(events: DataFrame,
     against exact count_distinct."""
     df = geo_events(events)
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", WATERMARK)
     return df.groupBy(F.window("ts", "10 minutes").start.alias("win_start"),
                       "tile_token") \
         .agg(F.count("*").alias("n_events"),
              F.hll_sketch_estimate(
-                 F.hll_sketch_agg("user_id", F.lit(lg_k)))
+                 F.hll_sketch_agg("user_id", F.lit(USER_SKETCH_LG_K)))
              .cast("long").alias("user_est"))
 
 
-def run_user_sketch_to_memory(spark: SparkSession, events_dir: str,
-                              name: str = "tile_user_sketch"
-                              ) -> DataFrame:
-    """TEST-ONLY runner (ADVICE r5): outputMode('complete') keeps
-    every window ever seen in the memory sink, so total state grows
-    with the window count even though per-group state is bounded. A
-    production deployment should use append/update mode so the
-    watermark actually evicts closed windows."""
-    q = windowed_tile_user_sketch(read_events_stream(spark, events_dir)) \
-        .writeStream.format("memory").queryName(name) \
-        .outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def run_sessions_to_memory(spark: SparkSession, events_dir: str,
-                           name: str = "user_sessions") -> DataFrame:
-    q = user_sessions(read_events_stream(spark, events_dir)) \
-        .writeStream.format("memory").queryName(name) \
-        .outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def dedup_events_stream(events: DataFrame,
-                        watermark: str = "1 hour") -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """STREAMING exact dedup (the training-pipeline ingest guard):
-    drop replayed/duplicate event_ids arriving within the watermark
-    horizon via ``dropDuplicatesWithinWatermark`` — bounded state
-    (keys older than the watermark are evicted), exactly-once output
-    per key inside the horizon. On a batch DataFrame it degrades to
+    drop replayed/duplicate event_ids arriving within the
+    ``DEDUP_WATERMARK`` horizon via ``dropDuplicatesWithinWatermark``
+    — bounded state (keys older than the watermark are evicted),
+    exactly-once output per key inside the horizon. On a batch DataFrame it degrades to
     plain ``dropDuplicates`` (the stream≡batch test twin)."""
     if events.isStreaming:
-        return events.withWatermark("ts", watermark) \
+        return events.withWatermark("ts", DEDUP_WATERMARK) \
             .dropDuplicatesWithinWatermark(["event_id"])
     return events.dropDuplicates(["event_id"])
 
@@ -147,12 +135,10 @@ def dedup_events_stream(events: DataFrame,
 CORRELATE_WINDOW_MIN = 5   # pair events within +-5 minutes
 
 
-def correlated_event_pairs(events: DataFrame,
-                           window_min: int = CORRELATE_WINDOW_MIN
-                           ) -> DataFrame:
+def correlated_event_pairs(events: DataFrame) -> DataFrame:
     """STREAM-STREAM interval self-JOIN (SURVEY §2.10 widened in r4):
-    pairs of events by the same user within ``window_min`` minutes of
-    each other — the sessionless correlation primitive (click→
+    pairs of events by the same user within ``CORRELATE_WINDOW_MIN``
+    minutes of each other — the sessionless correlation primitive (click→
     purchase attribution, retry detection, co-occurring signals).
 
     On a streaming DataFrame both sides carry event-time watermarks
@@ -165,15 +151,15 @@ def correlated_event_pairs(events: DataFrame,
     twin (DuckDB-oracled via ``event_pairs``). Output (user_id, e1,
     e2) with e1 < e2, each qualifying pair exactly once.
     """
-    iv = F.expr(f"INTERVAL {window_min} MINUTES")
+    iv = F.expr(f"INTERVAL {CORRELATE_WINDOW_MIN} MINUTES")
     a = events.select("user_id", F.col("event_id").alias("e1"),
                       F.col("ts").alias("ts1"))
     b = events.select(F.col("user_id").alias("user_id_b"),
                       F.col("event_id").alias("e2"),
                       F.col("ts").alias("ts2"))
     if events.isStreaming:
-        a = a.withWatermark("ts1", f"{window_min} minutes")
-        b = b.withWatermark("ts2", f"{window_min} minutes")
+        a = a.withWatermark("ts1", f"{CORRELATE_WINDOW_MIN} minutes")
+        b = b.withWatermark("ts2", f"{CORRELATE_WINDOW_MIN} minutes")
     else:
         # batch twin: both sides shuffle on user_id either way, but a
         # shuffled-hash build skips the two per-partition sorts the
@@ -186,15 +172,6 @@ def correlated_event_pairs(events: DataFrame,
             & (F.col("ts2") >= F.col("ts1") - iv)
             & (F.col("ts2") <= F.col("ts1") + iv))
     return a.join(b, cond).select("user_id", "e1", "e2")
-
-
-def run_event_pairs_to_memory(spark: SparkSession, events_dir: str,
-                              name: str = "event_pairs") -> DataFrame:
-    q = correlated_event_pairs(read_events_stream(spark, events_dir)) \
-        .writeStream.format("memory").queryName(name) \
-        .outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def streaming_pip_counts(events: DataFrame, covering_rows: list,
@@ -222,9 +199,10 @@ STATEFUL_OUT_SCHEMA = ("tile_token string, n_events long, "
 STATEFUL_STATE_SCHEMA = "n long, s double, b int"
 
 
-def stateful_tile_totals(events: DataFrame, level: int = 2) -> DataFrame:
+def stateful_tile_totals(events: DataFrame) -> DataFrame:
     """CUSTOM STATEFUL streaming operator (SURVEY §2.10 /
-    applyInPandasWithState): running per-tile event totals whose state
+    applyInPandasWithState): running per-tile (level
+    ``STATEFUL_TILE_LEVEL``) event totals whose state
     persists ACROSS micro-batches — the pattern Spark's built-in
     windowed aggs can't express when the state transition is
     arbitrary code. Each update emits the tile's cumulative
@@ -234,7 +212,7 @@ def stateful_tile_totals(events: DataFrame, level: int = 2) -> DataFrame:
     import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    df = geo_events(events, level=level)
+    df = geo_events(events, level=STATEFUL_TILE_LEVEL)
 
     def _update(key, pdfs, state: GroupState):
         n, s, b = state.get if state.exists else (0, 0.0, 0)
@@ -250,19 +228,3 @@ def stateful_tile_totals(events: DataFrame, level: int = 2) -> DataFrame:
         _update, STATEFUL_OUT_SCHEMA, STATEFUL_STATE_SCHEMA,
         "update", GroupStateTimeout.NoTimeout)
 
-
-def run_stateful_to_memory(spark: SparkSession, events_dir: str,
-                           name: str = "tile_totals",
-                           max_files_per_trigger: int = 1) -> DataFrame:
-    """drive the stateful operator with one input FILE per
-    micro-batch (forces multi-batch state carry), availableNow until
-    drained; returns the memory sink (update mode — latest row per
-    tile is the running total)."""
-    stream = spark.readStream.schema(EVENTS_SCHEMA) \
-        .option("maxFilesPerTrigger", str(max_files_per_trigger)) \
-        .parquet(events_dir)
-    q = stateful_tile_totals(stream) \
-        .writeStream.format("memory").queryName(name) \
-        .outputMode("update").trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)

@@ -516,8 +516,7 @@ FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
 """
 
 
-def bigram_model(spark: SparkSession, sf_dir: str,
-                 top_k: int = BIGRAM_TOP_K) -> DataFrame:
+def bigram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corpus BIGRAM language-model statistics — the n-gram LM every
     importance-sampling / perplexity-style curation pipeline trains
     first: per left-token top-K continuations with count and a
@@ -540,11 +539,11 @@ def bigram_model(spark: SparkSession, sf_dir: str,
     w = Window.partitionBy("w1").orderBy(F.desc("n"), "w2")
     return scored.withColumn("rnk",
                              F.row_number().over(w).cast("int")) \
-        .where(F.col("rnk") <= top_k) \
+        .where(F.col("rnk") <= BIGRAM_TOP_K) \
         .select("w1", "w2", "n", "cond_fp", "rnk")
 
 
-def bigram_model_sql(top_k: int = BIGRAM_TOP_K) -> str:
+def bigram_model_sql() -> str:
     return f"""
 WITH bg AS ({_BIGRAMS_SQL.strip()}),
 pair AS (SELECT w1, w2, count(*) AS n FROM bg GROUP BY 1, 2),
@@ -558,7 +557,7 @@ ranked AS (
   SELECT *, CAST(row_number() OVER (PARTITION BY w1
                                     ORDER BY n DESC, w2) AS INT) AS rnk
   FROM scored)
-SELECT w1, w2, n, cond_fp, rnk FROM ranked WHERE rnk <= {top_k}
+SELECT w1, w2, n, cond_fp, rnk FROM ranked WHERE rnk <= {BIGRAM_TOP_K}
 """
 
 
@@ -925,8 +924,7 @@ WHERE ({h}) % 100 < ({pct})
 """
 
 
-def dedup_components(spark: SparkSession, sf_dir: str,
-                     max_iters: int = 50) -> DataFrame:
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """canonical-document assignment: connected components over the
     MinHash-LSH candidate-pair graph via iterative min-label
     propagation — each doc gets the smallest doc_id reachable through
@@ -942,7 +940,7 @@ def dedup_components(spark: SparkSession, sf_dir: str,
     """
     pairs = minhash_lsh_pairs(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id").distinct()
-    return _components(docs, pairs, max_iters)
+    return _components(docs, pairs)
 
 
 def _components(docs: DataFrame, pairs: DataFrame,
@@ -1039,8 +1037,7 @@ SELECT doc_id, min(r) AS canonical_id FROM reach GROUP BY doc_id
 KEEP_BEST_SALT = 16   # stage-1 slices per cluster in dedup_keep_best
 
 
-def dedup_keep_best(spark: SparkSession, sf_dir: str,
-                    components: DataFrame | None = None) -> DataFrame:
+def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALITY-AWARE canonical selection: production dedup keeps the
     BEST document of each near-dup cluster, not the smallest id —
     min-id canonicalization silently prefers whichever crawl happened
@@ -1062,13 +1059,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
     total order, so the two-stage winner is EXACTLY the one-window
     winner — output and oracle unchanged.
     Output: (doc_id, canonical_id, best_doc_id, keep).
-    ``components`` lets a caller that already materialized
-    :func:`dedup_components` compose instead of recomputing.
     """
     from pyspark.sql import Window
 
-    comp = (components if components is not None
-            else dedup_components(spark, sf_dir))
+    comp = dedup_components(spark, sf_dir)
     q = quality_score(spark, sf_dir).select("doc_id", "quality")
     # comp is checkpoint-shaped (no stats) so Catalyst sort-merges by
     # default; a shuffled-hash build skips both sorts (r6 A/B:
@@ -1205,14 +1199,14 @@ def banded_hamming_pairs(bands: DataFrame, max_hamming: int) -> DataFrame:
         .distinct()
 
 
-def simhash_pairs(spark: SparkSession, sf_dir: str,
-                  max_hamming: int = SIMHASH_HAMMING_MAX) -> DataFrame:
-    """near-dup pairs by SimHash hamming distance <= ``max_hamming``.
+def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """near-dup pairs by SimHash hamming distance <=
+    ``SIMHASH_HAMMING_MAX`` (h).
 
     Pigeonhole banding makes this an EQUI-join (shuffles on the band
-    key, scales): split the 16-bit simhash into ``max_hamming + 1``
-    bands; any pair at hamming <= max_hamming differs in at most
-    max_hamming bands, so it agrees EXACTLY on at least one band.
+    key, scales): split the 16-bit simhash into h + 1 bands; any pair
+    at hamming <= h differs in at most h bands, so it agrees EXACTLY
+    on at least one band.
     Candidates = band-key equi-join matches; the exact
     ``bit_count(xor)`` filter then removes false positives. Output is
     identical to the naive all-pairs theta join (which planned as a
@@ -1221,15 +1215,15 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     band keys are salt-spread (output unchanged).
     """
     bands = hamming_bands(simhash(spark, sf_dir), "doc_id", "simhash",
-                          SIMHASH_BITS, max_hamming)
-    return banded_hamming_pairs(bands, max_hamming)
+                          SIMHASH_BITS, SIMHASH_HAMMING_MAX)
+    return banded_hamming_pairs(bands, SIMHASH_HAMMING_MAX)
 
 
-def simhash_pairs_sql(max_hamming: int = SIMHASH_HAMMING_MAX) -> str:
+def simhash_pairs_sql() -> str:
     return f"""
 WITH sig AS ({simhash_sql().strip()})
 SELECT a.doc_id AS d1, b.doc_id AS d2,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_HAMMING_MAX}
 """

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Package the engine for ``spark-submit --py-files`` deployment
 (BASELINE.json north_rule): zips the ``s2spark`` package into
-``dist/s2spark.zip`` so executors can import it."""
+``dist/s2spark.zip`` so executors can import it. Run as a script, it
+prints the zip's path; ``main()`` itself prints nothing, since
+``__spark_entry__`` calls it inside a query whose caller may own
+stdout."""
 
 import os
 import zipfile
@@ -23,9 +26,8 @@ def main() -> str:
                     continue
                 full = os.path.join(dirpath, fn)
                 z.write(full, os.path.relpath(full, ROOT))
-    print(out)
     return out
 
 
 if __name__ == "__main__":
-    main()
+    print(main())

@@ -84,6 +84,21 @@ def test_sortable_ordering(id_df, spark):
     np.testing.assert_array_equal(got.view(np.uint64), np.sort(ids))
 
 
+def test_driver_sortable_matches_column(id_df):
+    """the driver-side sign flip, scalar and array form, equals the
+    Column ``sortable`` on ids from all 6 faces, whether the ids come
+    as uint64 or as their signed int64 view."""
+    df, ids = id_df
+    assert set((ids >> np.uint64(61)).tolist()) == set(range(6))
+    want = np.array([r[0] for r in
+                     df.select(CC.sortable("id").alias("x")).collect()])
+    signed = ids.view(np.int64)
+    np.testing.assert_array_equal(C.sortable(ids), want)
+    np.testing.assert_array_equal(C.sortable(signed), want)
+    assert [C.sortable_int(int(u)) for u in ids] == want.tolist()
+    assert [C.sortable_int(int(x)) for x in signed] == want.tolist()
+
+
 def test_children_and_advance(id_df):
     df, ids = id_df
     lvl12 = df.where(CC.level("id") == 12)

@@ -45,6 +45,11 @@ def sparse_points(spark):
 QUERIES = [(0, 10.0, 20.0, 3), (1, -45.0, 170.0, 5), (2, 80.0, -10.0, 2)]
 
 
+def _qdf(spark, queries):
+    return spark.createDataFrame(
+        queries, "query_id long, lat double, lng double, k int")
+
+
 def test_knn_normal_rounds_exact(spark, sparse_points):
     rows, df = sparse_points
     got = sorted(map(tuple, J.knn_join(spark, df, QUERIES,
@@ -53,11 +58,12 @@ def test_knn_normal_rounds_exact(spark, sparse_points):
 
 
 def test_knn_fallback_rounds_exhausted(spark, sparse_points):
-    """max_rings=1 on sparse data: most queries cannot certify in a
+    """init_rings=1 on sparse data: most queries cannot certify in a
     one-ring opening disk -> pass 2 resolves them, still exact."""
     rows, df = sparse_points
-    got = sorted(map(tuple, J.knn_join(spark, df, QUERIES, level=10,
-                                       max_rings=1).collect()))
+    got = sorted(map(tuple, J.knn_join_df(df, _qdf(spark, QUERIES),
+                                          level=10,
+                                          init_rings=1).collect()))
     assert got == _brute(rows, QUERIES)
 
 
@@ -66,17 +72,14 @@ def test_knn_max_rounds_zero_brute_force(spark, sparse_points):
     resolves what it cannot certify (never the UNCERTIFIED own-tile
     ranking)."""
     rows, df = sparse_points
-    q = spark.createDataFrame(
-        [(qid, lat, lng, k) for qid, lat, lng, k in QUERIES],
-        "query_id long, lat double, lng double, k int")
-    got = sorted(map(tuple, J.knn_join_df(df, q, level=6,
+    got = sorted(map(tuple, J.knn_join_df(df, _qdf(spark, QUERIES), level=6,
                                           max_rounds=0).collect()))
     assert got == _brute(rows, QUERIES)
 
 
 def test_knn_fallback_bounded_no_crossjoin(spark, monkeypatch):
     """a ring of points past the 1-ring certification bound with
-    max_rings=1: the query finds >= k candidates but cannot certify,
+    init_rings=1: the query finds >= k candidates but cannot certify,
     so pass 2 takes the BOUNDED arm — a covering-disk EQUI-join sized
     by its proven kth upper bound, not a cross join against every
     point (VERDICT r4 item 3). crossJoin is patched on the concrete
@@ -100,8 +103,9 @@ def test_knn_fallback_bounded_no_crossjoin(spark, monkeypatch):
         raise AssertionError("bounded kNN fallback must not crossJoin")
 
     monkeypatch.setattr(CDF, "crossJoin", _no_cross)
-    got = sorted(map(tuple, J.knn_join(spark, df, queries, level=11,
-                                       max_rings=1).collect()))
+    got = sorted(map(tuple, J.knn_join_df(df, _qdf(spark, queries),
+                                          level=11,
+                                          init_rings=1).collect()))
     assert J.LAST_KNN_FALLBACK == {"bounded": True, "unbounded": False}
     assert got == _brute(rows, queries)
 
@@ -112,8 +116,9 @@ def test_knn_fallback_unbounded_arm_still_exact(spark, sparse_points):
     cannot certify either, and the stragglers take the (rare)
     brute-force arm — still exact."""
     rows, df = sparse_points
-    got = sorted(map(tuple, J.knn_join(spark, df, QUERIES, level=13,
-                                       max_rings=1).collect()))
+    got = sorted(map(tuple, J.knn_join_df(df, _qdf(spark, QUERIES),
+                                          level=13,
+                                          init_rings=1).collect()))
     assert J.LAST_KNN_FALLBACK == {"bounded": False, "unbounded": True}
     assert got == _brute(rows, QUERIES)
 
@@ -151,7 +156,7 @@ def test_knn_all_certified_in_pass_one(spark, sparse_points):
     0): there is no straggler, so LAST_KNN_FALLBACK is None — reset on
     entry, not left over from the previous call."""
     rows, df = sparse_points
-    J.knn_join(spark, df, QUERIES, level=13, max_rings=1)
+    J.knn_join_df(df, _qdf(spark, QUERIES), level=13, init_rings=1)
     assert J.LAST_KNN_FALLBACK is not None
     on_points = [(pid, lat, lng, 1) for pid, lat, lng in rows[:4]]
     got = sorted(map(tuple, J.knn_join(spark, df, on_points,

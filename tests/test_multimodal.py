@@ -24,7 +24,7 @@ def test_audio_codec_stub():
 
 def test_video_frame_sampling(spark):
     vids = MM.synth_video(spark, 25)
-    frames = MM.sample_frames(vids, every_n=5).collect()
+    frames = MM.sample_frames(vids).collect()
     n_expected = sum((r["n_frames"] + 4) // 5
                      for r in vids.select("n_frames").collect())
     assert len(frames) == n_expected

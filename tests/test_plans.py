@@ -23,8 +23,7 @@ def _plan(df) -> str:
 def test_bucketed_join_is_broadcast_hash(spark, sf_dir, pieces):
     cov_rows, params = pieces
     cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
-    df = J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df, params,
-                             bucket_level=8)
+    df = J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df, params)
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -37,7 +36,7 @@ def test_bucketed_join_single_encode_pass(spark, sf_dir, pieces):
     cov_rows, params = pieces
     cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
     df = J.pip_join_bucketed(FX.points_df(spark, sf_dir), cov_df,
-                             params, bucket_level=8)
+                             params)
     assert _plan(df).count("ArrowEvalPython") == 2
 
 

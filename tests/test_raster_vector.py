@@ -20,8 +20,15 @@ def pieces():
 
 def _bucketed_align(points, cov_rows, params, level=8):
     cov_df = J.coverings_df(points.sparkSession, cov_rows, bucket_level=8)
-    pts = J.pip_join_bucketed(points, cov_df, params, bucket_level=8,
-                              extra_cols=("lat", "lng"), emit_cell_id=True)
+    # the bucket join emits (region_id, point_id); lat, lng and cell_id
+    # come from joining the points back on point_id. The fixture
+    # repeats point_ids (5,992 distinct of 6,000 at sf0.001), so both
+    # sides key on a hash of the whole row instead.
+    keyed = points.withColumn("point_id",
+                              F.xxhash64("point_id", "lat", "lng"))
+    matched = J.pip_join_bucketed(keyed, cov_df, params)
+    pts = J.with_cell_id(matched.join(
+        keyed.select("point_id", "lat", "lng"), "point_id"))
     return pts.withColumn("tile_id", CC.parent("cell_id", level)) \
         .groupBy("region_id", "tile_id") \
         .agg(F.count("*").alias("n_points"),

@@ -17,7 +17,9 @@ def test_stream_matches_batch(spark, sf_dir, tmp_path):
     batch = ST.windowed_tile_counts(spark.read.parquet(src))
     expected = sorted(tuple(r) for r in batch.collect())
 
-    got_df = ST.run_stream_to_memory(spark, stream_dir, name="tc_test")
+    got_df = ST.run_to_memory(
+        ST.windowed_tile_counts(ST.read_events_stream(spark, stream_dir)),
+        "tc_test", "complete")
     got = sorted(tuple(r) for r in got_df.collect())
     assert len(got) > 0
     assert got == expected
@@ -29,11 +31,8 @@ def test_stateless_tile_assignment_on_stream(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/events.parquet",
                 os.path.join(stream_dir, "part-0.parquet"))
     stream = ST.geo_events(ST.read_events_stream(spark, stream_dir))
-    q = stream.select("event_id", "tile_token") \
-        .writeStream.format("memory").queryName("tiles_test") \
-        .outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    rows = spark.table("tiles_test").collect()
+    rows = ST.run_to_memory(stream.select("event_id", "tile_token"),
+                            "tiles_test", "append").collect()
     n_batch = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert len(rows) == n_batch
     assert all(r["tile_token"] for r in rows)
@@ -63,7 +62,9 @@ def test_stateful_operator_state_survives_micro_batches(spark, sf_dir,
         f = glob.glob(str(tmp_path / f"stage{k}" / "*.parquet"))[0]
         sh.copy(f, os.path.join(stream_dir, f"part-{k}.parquet"))
 
-    sink = ST.run_stateful_to_memory(spark, stream_dir, name="tt_test")
+    sink = ST.run_to_memory(
+        ST.stateful_tile_totals(ST.read_events_per_file(spark, stream_dir)),
+        "tt_test", "update")
     # update-mode sink: the LAST row per tile is the running total
     from pyspark.sql import Window
     w = Window.partitionBy("tile_token").orderBy(
@@ -105,11 +106,9 @@ def test_stream_static_pip_join(spark, sf_dir, tmp_path):
     assert expected, "fixture regions must catch some events"
 
     stream = ST.read_events_stream(spark, stream_dir)
-    q = ST.streaming_pip_counts(stream, cov_rows, params) \
-        .writeStream.format("memory").queryName("pip_stream_test") \
-        .outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.table("pip_stream_test").collect())
+    got = sorted(tuple(r) for r in ST.run_to_memory(
+        ST.streaming_pip_counts(stream, cov_rows, params),
+        "pip_stream_test", "complete").collect())
     assert got == expected
 
 
@@ -130,7 +129,9 @@ def test_session_windows_stream_matches_batch_and_islands(spark, sf_dir,
 
     batch = ST.user_sessions(spark.read.parquet(src))
     expected = sorted(tuple(r) for r in batch.collect())
-    got_df = ST.run_sessions_to_memory(spark, stream_dir, name="us_test")
+    got_df = ST.run_to_memory(
+        ST.user_sessions(ST.read_events_stream(spark, stream_dir)),
+        "us_test", "complete")
     got = sorted(tuple(r) for r in got_df.collect())
     assert len(got) > 0
     assert got == expected
@@ -200,14 +201,10 @@ def test_stream_dedup_drops_replayed_events(spark, sf_dir, tmp_path):
     sh.copy(f, os.path.join(stream_dir, "part-0.parquet"))
     sh.copy(f, os.path.join(stream_dir, "part-1.parquet"))
 
-    stream = spark.readStream.schema(ST.EVENTS_SCHEMA) \
-        .option("maxFilesPerTrigger", "1").parquet(stream_dir)
-    q = ST.dedup_events_stream(stream) \
-        .select("event_id") \
-        .writeStream.format("memory").queryName("dd_test") \
-        .outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    got = sorted(r["event_id"] for r in spark.table("dd_test").collect())
+    stream = ST.read_events_per_file(spark, stream_dir)
+    sink = ST.run_to_memory(ST.dedup_events_stream(stream).select("event_id"),
+                            "dd_test", "append")
+    got = sorted(r["event_id"] for r in sink.collect())
     exp = sorted(r["event_id"]
                  for r in ST.dedup_events_stream(src).select("event_id")
                  .collect())
@@ -230,8 +227,9 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir,
     expected = sorted(tuple(r) for r in batch.collect())
     assert len(expected) > 0
 
-    got_df = ST.run_event_pairs_to_memory(spark, stream_dir,
-                                          name="ep_test")
+    got_df = ST.run_to_memory(
+        ST.correlated_event_pairs(ST.read_events_stream(spark, stream_dir)),
+        "ep_test", "append")
     got = sorted(tuple(r) for r in got_df.collect())
     assert got == expected
 
@@ -263,13 +261,9 @@ def test_stream_stream_join_across_micro_batches(spark, sf_dir,
     expected = sorted(tuple(r) for r in batch.collect())
     assert expected
 
-    stream = spark.readStream.schema(ST.EVENTS_SCHEMA) \
-        .option("maxFilesPerTrigger", "1").parquet(stream_dir)
-    q = ST.correlated_event_pairs(stream) \
-        .writeStream.format("memory").queryName("ep_mb_test") \
-        .outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.table("ep_mb_test").collect())
+    stream = ST.read_events_per_file(spark, stream_dir)
+    got = sorted(tuple(r) for r in ST.run_to_memory(
+        ST.correlated_event_pairs(stream), "ep_mb_test", "append").collect())
     assert got == expected
 
 
@@ -297,10 +291,8 @@ def test_json_props_extraction_on_stream(spark, sf_dir, tmp_path):
              F.sum("k").alias("sum_k"),
              F.min("k").alias("min_k"),
              F.max("k").alias("max_k"))
-    q = agg.writeStream.format("memory").queryName("props_test") \
-        .outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.table("props_test").collect())
+    got = sorted(tuple(r) for r in
+                 ST.run_to_memory(agg, "props_test", "complete").collect())
     assert got == expected
 
 
@@ -309,7 +301,7 @@ def test_stream_user_sketch_matches_batch_and_gates_exact(
     """r5 HLL streaming twin: the stream run must be BIT-EQUAL to the
     batch run (HLL register maxima are order/partitioning
     independent), and the batch estimates must track exact
-    count_distinct within the lg_k=12 error bound."""
+    count_distinct within the USER_SKETCH_LG_K=12 error bound."""
     import pyspark.sql.functions as F
 
     src = f"{sf_dir}/events.parquet"
@@ -319,8 +311,9 @@ def test_stream_user_sketch_matches_batch_and_gates_exact(
 
     batch = ST.windowed_tile_user_sketch(spark.read.parquet(src))
     expected = sorted(tuple(r) for r in batch.collect())
-    got_df = ST.run_user_sketch_to_memory(spark, stream_dir,
-                                          name="tus_test")
+    got_df = ST.run_to_memory(
+        ST.windowed_tile_user_sketch(ST.read_events_stream(spark, stream_dir)),
+        "tus_test", "complete")
     got = sorted(tuple(r) for r in got_df.collect())
     assert len(got) > 0
     assert got == expected

@@ -13,6 +13,18 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def test_make_pyfiles_main_prints_nothing(capsys, monkeypatch):
+    """``__spark_entry__._ensure_shipped`` calls ``main()`` inside the
+    first ``queries()`` call when the zip is stale, so ``main()`` must
+    not write to a stdout the caller may own; only the script prints
+    the path."""
+    monkeypatch.syspath_prepend(os.path.join(ROOT, "scripts"))
+    import make_pyfiles
+    out = make_pyfiles.main()
+    assert os.path.exists(out)
+    assert capsys.readouterr().out == ""
+
+
 @pytest.mark.slow
 def test_spark_submit_pyfiles(tmp_path, spark, sf_dir):
     from s2spark.fixtures import points_df

@@ -310,11 +310,10 @@ def _q_pip_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIP against the general simple polygon fixture (concave,
-    non-star U-shape, region 25) — winding-parity containment
-    (SURVEY §1.1 row 12); full value-hash oracle from the identical
-    crossing-test SQL."""
-    rid = FX.SPOLYS[0][0]
+    """PIP against the concave, non-star U-shaped polygon fixture
+    (region 25) — crossing-parity containment (SURVEY §1.1 row 12);
+    full value-hash oracle from the identical crossing-test SQL."""
+    rid = FX.U_POLY
     objs = {rid: FX.region_objects()[rid]}
     params = {rid: FX.region_params()[rid]}
     cov_rows = J.compute_coverings(objs)
@@ -339,8 +338,7 @@ def _q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi/anti)."""
     cov_rows, params = _coverings()
     pts = FX.points_df(spark, sf_dir)
-    return J.pip_semi(pts, cov_rows, params, negate=True) \
-        .select("point_id")
+    return J.pip_anti(pts, cov_rows, params).select("point_id")
 
 
 def _q_region_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,9 +667,47 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from s2spark import text as T
     raw = {
         # The driver certifies the FIRST 50 keys, so the window leads
-        # with the keys whose code path changed last, then the
-        # earlier order.
-        # --- operator signature changed: options became constants ---
+        # with the keys whose code path changed last, then the keys
+        # left outside the last window, then the rest.
+        # --- verify params or oracle SQL changed: one polygon type,
+        # pip_anti through the stab pass, the shared region arms ---
+        "pip_broadcast": _q_pip_broadcast,
+        "pip_bucketed": _q_pip_bucketed,
+        "pip_salted": _q_pip_salted,
+        "pip_planned": _q_pip_planned,
+        "pip_polygon": _q_pip_polygon,
+        "pip_buffered": _q_pip_buffered,
+        "pip_anti": _q_pip_anti,
+        "region_stats": _q_region_stats,
+        "raster_vector": _q_raster_vector,
+        "image_pip": _q_image_pip,
+        # --- outside the last window ---
+        "token_quantiles": T.token_quantiles,
+        "knn_many": _q_knn_many,
+        "cell_children": _q_cell_children,
+        "simhash": T.simhash,
+        "tile_rollup": _q_tile_rollup,
+        "image_tile_stats_exact": _q_image_tile_stats_exact,
+        "pricing_summary": _q_pricing_summary,
+        "tile_setops": _q_tile_setops,
+        "top_customers": _q_top_customers,
+        "top_tiles": _q_top_tiles,
+        "fingerprint": T.fingerprint,
+        "lang_id": T.lang_id,
+        "neighbors": _q_neighbors,
+        "pii_scan": T.pii_scan,
+        "stratified_sample": T.stratified_sample,
+        "tile_enumerate": _q_tile_enumerate,
+        "token_count": T.token_count,
+        "token_roundtrip": _q_knn_tokens,
+        "vertex_neighbors": _q_vertex_neighbors,
+        "decontaminate": T.decontaminate,
+        "repetition_ratio": T.repetition_ratio,
+        "pq_codes": A.pq_codes,
+        "image_verify": _q_image_verify,
+        "image_resize": _q_image_resize,
+        "image_tile_stats": _q_image_tile_stats,
+        # --- earlier order ---
         "ann_ivf_buckets": A.ivf_buckets,
         "ann_ivf": A.ann_ivf_topk,
         "ann_ivfpq": A.ann_ivfpq_topk,
@@ -701,20 +737,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cellunion_intersect": _q_cellunion_intersect,
         "distance_join": _q_distance_join,
         "knn": _q_knn,
-        "pip_bucketed": _q_pip_bucketed,
-        # --- code path touched: the bucket join, the stab's shared
-        # sortable helper, the stream pair window constant ---
-        "pip_salted": _q_pip_salted,
         "event_pairs": _q_event_pairs,
-        "pip_broadcast": _q_pip_broadcast,
-        "pip_planned": _q_pip_planned,
-        "pip_polygon": _q_pip_polygon,
-        "pip_buffered": _q_pip_buffered,
-        "pip_anti": _q_pip_anti,
-        "region_stats": _q_region_stats,
-        "raster_vector": _q_raster_vector,
-        "image_pip": _q_image_pip,
-        # --- earlier order ---
         "tile_assign": _q_tile_assign,
         "cell_algebra": _q_cell_algebra,
         "source_stats": T.source_stats,
@@ -725,49 +748,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_window": _q_events_window,
         "event_sessions": _q_event_sessions,
         "tfidf_top_terms": T.tfidf_top_terms,
-        "token_quantiles": T.token_quantiles,
-        "knn_many": _q_knn_many,
-        "cell_children": _q_cell_children,
-        "simhash": T.simhash,
-        "tile_rollup": _q_tile_rollup,
-        "image_tile_stats_exact": _q_image_tile_stats_exact,
-        "pricing_summary": _q_pricing_summary,
-        "tile_setops": _q_tile_setops,
-        "top_customers": _q_top_customers,
-        "top_tiles": _q_top_tiles,
-        "fingerprint": T.fingerprint,
-        "lang_id": T.lang_id,
-        "neighbors": _q_neighbors,
-        "pii_scan": T.pii_scan,
-        "stratified_sample": T.stratified_sample,
-        "tile_enumerate": _q_tile_enumerate,
-        "token_count": T.token_count,
-        "token_roundtrip": _q_knn_tokens,
-        "vertex_neighbors": _q_vertex_neighbors,
-        "decontaminate": T.decontaminate,
-        "repetition_ratio": T.repetition_ratio,
-        "pq_codes": A.pq_codes,
-        "image_verify": _q_image_verify,
-        "image_resize": _q_image_resize,
-        "image_tile_stats": _q_image_tile_stats,
     }
     return {k: _wrap(v) for k, v in raw.items()}
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
 
 
 def _q_image_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -930,10 +912,8 @@ def _q_image_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _image_pip_sql() -> str:
     golden_imgs = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "tests", "golden", "geo_images.parquet")
-    arms = "\nUNION ALL\n".join(
-        f"SELECT CAST({rid} AS BIGINT) AS region_id, phash, leaf_cell_id "
-        f"FROM g WHERE " + FX.region_predicate_sql(rid)
-        for rid in sorted(FX.region_params()))
+    arms = FX.region_arms_sql("phash, leaf_cell_id", "g",
+                              FX.region_params())
     deg = FX.DEG
     return f"""
 WITH g AS (SELECT lat, lng, leaf_cell_id, phash,
@@ -1082,23 +1062,19 @@ FROM f GROUP BY {synth.parent_sql('tf', 4)}
 WITH t AS ({_synth_base()})
 SELECT point_id, {s} AS parsed_id, TRUE AS valid FROM t
 """
+    params = FX.region_params()
     pip = FX.pip_oracle_sql()
-    pip_cast = f"SELECT CAST(region_id AS BIGINT) AS region_id, point_id FROM ({pip})"
     anti_pred = " OR ".join(
-        FX.region_predicate_sql(rid) for rid in sorted(FX.region_params()))
+        FX.region_predicate_sql(*params[rid]) for rid in sorted(params))
     pip_anti = f"""
 WITH ptx AS ({FX.PTX_SQL.strip()})
 SELECT point_id FROM ptx WHERE NOT ({anti_pred})
 """
     # region_stats: per-region arms with lat/lng carried through
-    arms = [
-        f"SELECT CAST({rid} AS BIGINT) AS region_id, point_id, lat, lng "
-        f"FROM ptx WHERE " + FX.region_predicate_sql(rid)
-        for rid in sorted(FX.region_params())
-    ]
     region_stats = (
         f"WITH ptx AS ({FX.PTX_SQL.strip()}),\n"
-        "m AS (" + "\nUNION ALL\n".join(arms) + ")\n"
+        "m AS (" + FX.region_arms_sql("point_id, lat, lng", "ptx", params)
+        + ")\n"
         "SELECT region_id, count(*) AS n_points, "
         "round(avg(lat), 4) AS avg_lat, round(avg(lng), 4) AS avg_lng "
         "FROM m GROUP BY region_id")
@@ -1204,10 +1180,7 @@ SELECT cell_id, neighbor_id,
        {synth.token_sql('neighbor_id')} AS neighbor_token
 FROM j
 """
-    rv_arms = "\nUNION ALL\n".join(
-        f"SELECT CAST({rid} AS BIGINT) AS region_id, lat, lng "
-        f"FROM ptx WHERE " + FX.region_predicate_sql(rid)
-        for rid in sorted(FX.region_params()))
+    rv_arms = FX.region_arms_sql("lat, lng", "ptx", params)
     raster_vector = f"""
 WITH ptx AS ({FX.PTX_SQL.strip()}),
 g AS (SELECT lat, lng, leaf_cell_id FROM read_parquet('{golden}')),
@@ -1248,18 +1221,15 @@ b AS (SELECT DISTINCT {synth.parent_sql('sc', 10)} AS cell_id
 SELECT cell_id FROM b
 WHERE {synth.parent_sql('cell_id', 8)} IN (SELECT cell_id FROM a)
 """,
-        "pip_broadcast": pip_cast,
-        "pip_bucketed": pip_cast,
-        "pip_salted": pip_cast,
-        "pip_planned": pip_cast,
-        "pip_polygon": f"""
-WITH ptx AS ({FX.PTX_SQL.strip()})
-SELECT CAST({FX.SPOLYS[0][0]} AS BIGINT) AS region_id, point_id
-FROM ptx WHERE {FX.region_predicate_sql(FX.SPOLYS[0][0])}
-""",
-        "pip_buffered": ("SELECT CAST(region_id AS BIGINT) AS region_id,"
-                         " point_id FROM ("
-                         + FX.buffered_pip_oracle_sql() + ")"),
+        "pip_broadcast": pip,
+        "pip_bucketed": pip,
+        "pip_salted": pip,
+        "pip_planned": pip,
+        "pip_polygon": (
+            f"WITH ptx AS ({FX.PTX_SQL.strip()})\n"
+            + FX.region_arms_sql("point_id", "ptx",
+                                 {FX.U_POLY: params[FX.U_POLY]})),
+        "pip_buffered": FX.buffered_pip_oracle_sql(),
         "pip_anti": pip_anti,
         "region_stats": region_stats,
         "knn": FX.knn_oracle_sql(),

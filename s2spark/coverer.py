@@ -5,7 +5,7 @@ get_interior_covering / defaults min_level=0, max_level=30,
 max_cells=8, level_mod=1; SURVEY.md §2.6). Regions are any object with
 the region interface: ``get_cap_bound()``, ``may_intersect(cell)``,
 ``contains(cell)`` (``s2spark.geometry`` Cap / LatLngRect /
-SphericalPolygon / Cell / CellUnion-adapters).
+SimplePolygon / Cell / CellUnion-adapters).
 
 Runs driver-side per region (broadcast afterwards) or inside
 ``applyInPandas`` for large region tables — never per point.

@@ -19,9 +19,6 @@ from s2spark.geometry import (
     Cap,
     LatLngRect,
     SimplePolygon,
-    SphericalPolygon,
-    StarPolygon,
-    cross,
     latlng_to_point,
 )
 
@@ -82,7 +79,6 @@ RECTS = [
     (16, -3.913, 3.442, -62.517, -51.873),   # Amazon (equator)
 ]
 
-# non-convex star-shaped polygon: (region_id, [(lat, lng), ...]) —
 # an 8-point star around (52, 58): alternating outer/inner radii
 def _star_vertices(center_lat, center_lng, r_out, r_in, points=8):
     out = []
@@ -95,29 +91,24 @@ def _star_vertices(center_lat, center_lng, r_out, r_in, points=8):
     return out
 
 
-STARS = [
-    (24, _star_vertices(52.113, 58.277, 6.1, 2.3)),
-]
-
-# general simple polygon (concave, NOT star-shaped): a U/horseshoe
-# around (−18, −47) — points deep in one arm cannot see the other arm
-# from any interior kernel point, so StarPolygon rejects it
-# (tests assert that); winding-parity containment handles it exactly.
-SPOLYS = [
-    (25, [(-22.117, -49.813), (-22.117, -44.209), (-14.321, -44.209),
-          (-14.321, -46.117), (-20.213, -46.117), (-20.213, -48.023),
-          (-14.321, -48.023), (-14.321, -49.813)]),
-]
-
-# convex CCW polygons: (region_id, [(lat, lng), ...])
+# simple polygons: (region_id, [(lat, lng), ...]) vertex rings, all
+# ``SimplePolygon``s (crossing-parity containment, either winding):
+# convex rings 21-23 (23 crosses the seam), the star 24, and a
+# concave, NOT star-shaped U/horseshoe 25 around (−18, −47) — points
+# deep in one arm cannot see the other arm from any interior point.
 POLYS = [
     (21, [(30.117, -10.413), (30.117, 10.413), (45.221, 14.332),
           (52.416, 0.117), (45.221, -14.332)]),
     (22, [(-20.311, 140.213), (-30.223, 150.448), (-20.311, 160.316),
           (-12.117, 150.448)]),
     (23, [(-5.113, -179.211), (5.317, -172.419), (12.116, -179.211),
-          (5.317, 174.108), (-5.113, 174.108)]),  # crosses the seam
+          (5.317, 174.108), (-5.113, 174.108)]),
+    (24, _star_vertices(52.113, 58.277, 6.1, 2.3)),
+    (25, [(-22.117, -49.813), (-22.117, -44.209), (-14.321, -44.209),
+          (-14.321, -46.117), (-20.213, -46.117), (-20.213, -48.023),
+          (-14.321, -48.023), (-14.321, -49.813)]),
 ]
+U_POLY = 25  # the concave, non-star ring ``pip_polygon`` joins against
 
 
 def region_objects() -> dict[int, object]:
@@ -128,10 +119,6 @@ def region_objects() -> dict[int, object]:
     for rid, lat_lo, lat_hi, lng_lo, lng_hi in RECTS:
         out[rid] = LatLngRect.from_degrees(lat_lo, lng_lo, lat_hi, lng_hi)
     for rid, verts in POLYS:
-        out[rid] = SphericalPolygon(verts)
-    for rid, verts in STARS:
-        out[rid] = StarPolygon(verts)
-    for rid, verts in SPOLYS:
         out[rid] = SimplePolygon(verts)
     return out
 
@@ -141,7 +128,7 @@ def region_params() -> dict[int, tuple[str, list[float]]]:
 
     cap:  [ax, ay, az, cos_radius]
     rect: [lat_lo, lat_hi, lng_lo, lng_hi]   (degrees; lo>hi wraps)
-    poly: flattened edge normals [ex0, ey0, ez0, ex1, ...]
+    spoly: 10 floats per edge (``SimplePolygon.crossing_params``)
     """
     out: dict[int, tuple[str, list[float]]] = {}
     for rid, lat, lng, rad in CAPS:
@@ -150,21 +137,6 @@ def region_params() -> dict[int, tuple[str, list[float]]]:
     for rid, lat_lo, lat_hi, lng_lo, lng_hi in RECTS:
         out[rid] = ("rect", [lat_lo, lat_hi, lng_lo, lng_hi])
     for rid, verts in POLYS:
-        pts = [latlng_to_point(la, ln) for la, ln in verts]
-        normals: list[float] = []
-        for i in range(len(pts)):
-            e = cross(pts[i], pts[(i + 1) % len(pts)])
-            normals.extend(e)
-        out[rid] = ("poly", normals)
-    for rid, verts in STARS:
-        star = StarPolygon(verts)
-        tri: list[float] = []
-        for e0, e1, e2 in star.tri_normals:
-            tri.extend(e0)
-            tri.extend(e1)
-            tri.extend(e2)
-        out[rid] = ("star", tri)
-    for rid, verts in SPOLYS:
         out[rid] = ("spoly", SimplePolygon(verts).crossing_params())
     return out
 
@@ -183,9 +155,9 @@ FROM ({POINTS_SQL.strip()})
 """
 
 
-def region_predicate_sql(rid: int) -> str:
-    """exact containment predicate over (lat, lng, px, py, pz, lngn)."""
-    kind, params = region_params()[rid]
+def region_predicate_sql(kind: str, params: list[float]) -> str:
+    """exact containment predicate over (lat, lng, px, py, pz, lngn)
+    for one ``region_params`` entry."""
     if kind == "cap":
         ax, ay, az, cosr = params
         return f"(({ax!r}) * px + ({ay!r}) * py + ({az!r}) * pz >= ({cosr!r}))"
@@ -197,15 +169,6 @@ def region_predicate_sql(rid: int) -> str:
         else:
             lng_p = f"(lngn >= ({lng_lo!r}) AND lngn <= ({lng_hi!r}))"
         return f"({lat_p} AND {lng_p})"
-    if kind == "star":
-        tris = []
-        for t in range(0, len(params), 9):
-            e = params[t:t + 9]
-            tris.append(
-                f"((({e[0]!r}) * px + ({e[1]!r}) * py + ({e[2]!r}) * pz >= 0.0)"
-                f" AND (({e[3]!r}) * px + ({e[4]!r}) * py + ({e[5]!r}) * pz >= 0.0)"
-                f" AND (({e[6]!r}) * px + ({e[7]!r}) * py + ({e[8]!r}) * pz >= 0.0))")
-        return "(" + " OR ".join(tris) + ")"
     if kind == "spoly":
         arms = []
         for t in range(0, len(params), 10):
@@ -218,23 +181,24 @@ def region_predicate_sql(rid: int) -> str:
                 f" AND ({acb!r}) * (({wx!r}) * px + ({wy!r}) * py"
                 f" + ({wz!r}) * pz) > 0.0 THEN 1 ELSE 0 END)")
         return "((" + " + ".join(arms) + ") % 2 = 1)"
-    terms = []
-    for i in range(0, len(params), 3):
-        ex, ey, ez = params[i:i + 3]
-        terms.append(f"(({ex!r}) * px + ({ey!r}) * py + ({ez!r}) * pz >= 0.0)")
-    return "(" + " AND ".join(terms) + ")"
+    raise ValueError(f"unknown region kind {kind!r}")
+
+
+def region_arms_sql(cols: str, source: str,
+                    params: dict[int, tuple[str, list[float]]]) -> str:
+    """one ``SELECT region_id, {cols} FROM {source}`` arm per region,
+    filtered by its exact predicate, as a UNION ALL (ascending ids)."""
+    return "\nUNION ALL\n".join(
+        f"SELECT CAST({rid} AS BIGINT) AS region_id, {cols} FROM {source} "
+        f"WHERE {region_predicate_sql(*params[rid])}"
+        for rid in sorted(params))
 
 
 def pip_oracle_sql() -> str:
     """brute-force exact point-in-region join: every (region, point)
     containment pair — the oracle for BOTH Spark join variants."""
-    arms = [
-        f"SELECT {rid} AS region_id, point_id FROM ptx WHERE "
-        + region_predicate_sql(rid)
-        for rid in sorted(region_params())
-    ]
     return (f"WITH ptx AS ({PTX_SQL.strip()})\n"
-            + "\nUNION ALL\n".join(arms))
+            + region_arms_sql("point_id", "ptx", region_params()))
 
 
 BUFFER_RAD = 0.01  # radius dilation for the buffered-PIP query
@@ -261,15 +225,8 @@ def buffered_cap_params() -> dict[int, tuple[str, list[float]]]:
 
 
 def buffered_pip_oracle_sql() -> str:
-    arms = []
-    params = buffered_cap_params()
-    for rid in sorted(params):
-        ax, ay, az, cosr = params[rid][1]
-        arms.append(
-            f"SELECT {rid} AS region_id, point_id FROM ptx WHERE "
-            f"(({ax!r}) * px + ({ay!r}) * py + ({az!r}) * pz >= ({cosr!r}))")
     return (f"WITH ptx AS ({PTX_SQL.strip()})\n"
-            + "\nUNION ALL\n".join(arms))
+            + region_arms_sql("point_id", "ptx", buffered_cap_params()))
 
 
 # ---------------------------------------------------------------------------

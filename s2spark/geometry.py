@@ -8,9 +8,9 @@ point/row) — the per-row hot paths live in ``s2spark.kernels``.
 Cell ids here are plain non-negative python ints (the uint64 bit
 pattern), so ordering comparisons are naturally unsigned.
 
-``SphericalPolygon`` is an engine extension (the reference has no
-polygon type — SURVEY.md §1.1 row 12): convex spherical polygons only,
-containment via edge-plane sign tests.
+``SimplePolygon`` is an engine extension (the reference has no
+polygon type — SURVEY.md §1.1 row 12): any simple vertex ring,
+containment via edge-crossing parity.
 """
 
 from __future__ import annotations
@@ -1026,160 +1026,17 @@ class LatLngRect:
 
 
 # ---------------------------------------------------------------------------
-# SphericalPolygon — engine EXTENSION (convex, CCW; SURVEY.md §1.1-12)
+# SimplePolygon — engine EXTENSION (SURVEY.md §1.1-12)
 # ---------------------------------------------------------------------------
 
-class SphericalPolygon:
-    """convex spherical polygon from CCW (lat, lng) degree vertices.
-
-    Containment: p is inside iff det(v_i, v_{i+1}, p) >= 0 for all
-    edges (all edge planes have p on their left). Exact for convex
-    rings; the constructor asserts convexity.
-    """
-
-    __slots__ = ("vertices",)
-
-    def __init__(self, latlngs):
-        self.vertices = [latlng_to_point(la, ln) for (la, ln) in latlngs]
-        n = len(self.vertices)
-        if n < 3:
-            raise ValueError("polygon needs >= 3 vertices")
-        for i in range(n):
-            a = self.vertices[i]
-            b = self.vertices[(i + 1) % n]
-            c = self.vertices[(i + 2) % n]
-            if dot(cross(a, b), c) <= 0:
-                raise ValueError("polygon must be convex CCW")
-
-    def contains_point(self, p) -> bool:
-        n = len(self.vertices)
-        for i in range(n):
-            a = self.vertices[i]
-            b = self.vertices[(i + 1) % n]
-            if dot(cross(a, b), p) < 0:
-                return False
-        return True
-
-    def contains_latlng(self, lat_deg: float, lng_deg: float) -> bool:
-        return self.contains_point(latlng_to_point(lat_deg, lng_deg))
-
-    # --- region interface -------------------------------------------------
-
-    def contains(self, cell: Cell) -> bool:
-        # convexity: all 4 vertices inside => the whole cell is inside
-        return all(self.contains_point(cell.get_vertex(k)) for k in range(4))
-
-    def may_intersect(self, cell: Cell) -> bool:
-        cell_v = [cell.get_vertex(k) for k in range(4)]
-        if any(self.contains_point(v) for v in cell_v):
-            return True
-        if any(cell.contains(v) for v in self.vertices):
-            return True
-        n = len(self.vertices)
-        for i in range(n):
-            a, b = self.vertices[i], self.vertices[(i + 1) % n]
-            for k in range(4):
-                if simple_crossing(a, b, cell_v[k], cell_v[(k + 1) & 3]):
-                    return True
-        return False
-
-    def get_cap_bound(self) -> Cap:
-        cx = sum(v[0] for v in self.vertices)
-        cy = sum(v[1] for v in self.vertices)
-        cz = sum(v[2] for v in self.vertices)
-        cap = Cap(normalize((cx, cy, cz)), 0.0)
-        for v in self.vertices:
-            cap = cap.add_point(v)
-        return cap
-
-
-class StarPolygon:
-    """star-shaped spherical polygon — engine extension beyond the
-    convex case: every vertex is visible from the centroid (kernel
-    point), so containment decomposes into a fan of spherical
-    triangles (centroid, v_i, v_{i+1}), each a 3-sign-test — exact,
-    vectorizable, and SQL-expressible for the oracle.
-
-    The coverer predicates use the same decomposition: a cell is
-    inside iff its 4 vertices are inside and none of its edges cross
-    a polygon edge; it may intersect iff any vertex test or edge
-    crossing fires.
-    """
-
-    __slots__ = ("vertices", "kernel", "tri_normals")
-
-    def __init__(self, latlngs):
-        self.vertices = [latlng_to_point(la, ln) for (la, ln) in latlngs]
-        n = len(self.vertices)
-        if n < 3:
-            raise ValueError("polygon needs >= 3 vertices")
-        cx = sum(v[0] for v in self.vertices)
-        cy = sum(v[1] for v in self.vertices)
-        cz = sum(v[2] for v in self.vertices)
-        self.kernel = normalize((cx, cy, cz))
-        # CCW fan triangles (kernel, v_i, v_{i+1}); star-shapedness
-        # requires each to be CCW
-        self.tri_normals = []
-        for i in range(n):
-            a = self.vertices[i]
-            b = self.vertices[(i + 1) % n]
-            if dot(cross(a, b), self.kernel) <= 0:
-                raise ValueError(
-                    "polygon is not star-shaped around its centroid "
-                    "(or wound CW)")
-            self.tri_normals.append((cross(self.kernel, a),
-                                     cross(a, b),
-                                     cross(b, self.kernel)))
-
-    def contains_point(self, p) -> bool:
-        for e0, e1, e2 in self.tri_normals:
-            if dot(e0, p) >= 0 and dot(e1, p) >= 0 and dot(e2, p) >= 0:
-                return True
-        return False
-
-    def contains_latlng(self, lat_deg: float, lng_deg: float) -> bool:
-        return self.contains_point(latlng_to_point(lat_deg, lng_deg))
-
-    # --- region interface -------------------------------------------------
-
-    def _edges(self):
-        n = len(self.vertices)
-        for i in range(n):
-            yield self.vertices[i], self.vertices[(i + 1) % n]
-
-    def contains(self, cell: Cell) -> bool:
-        cell_v = [cell.get_vertex(k) for k in range(4)]
-        if not all(self.contains_point(v) for v in cell_v):
-            return False
-        for a, b in self._edges():
-            for k in range(4):
-                if simple_crossing(a, b, cell_v[k], cell_v[(k + 1) & 3]):
-                    return False
-        return True
-
-    def may_intersect(self, cell: Cell) -> bool:
-        cell_v = [cell.get_vertex(k) for k in range(4)]
-        if any(self.contains_point(v) for v in cell_v):
-            return True
-        if any(cell.contains(v) for v in self.vertices):
-            return True
-        for a, b in self._edges():
-            for k in range(4):
-                if simple_crossing(a, b, cell_v[k], cell_v[(k + 1) & 3]):
-                    return True
-        return False
-
-    def get_cap_bound(self) -> Cap:
-        cap = Cap(self.kernel, 0.0)
-        for v in self.vertices:
-            cap = cap.add_point(v)
-        return cap
-
-
 class SimplePolygon:
-    """general SIMPLE spherical polygon — concave, non-star allowed
-    (SURVEY §1.1 row 12: real admin boundaries are neither convex nor
-    star-shaped). Containment by crossing parity against a fixed
+    """SIMPLE spherical polygon from (lat, lng) degree vertices, either
+    winding — convex, star-shaped and concave rings alike (SURVEY §1.1
+    row 12: real admin boundaries are neither convex nor star-shaped);
+    the engine's one polygon type. A ring whose non-adjacent edges
+    cross (a bowtie) is rejected at construction.
+
+    Containment by crossing parity against a fixed
     reference point known to be outside (``sphere.py ::
     simple_crossing`` per edge; the parity bookkeeping of
     ``S2Loop.contains``): p is inside iff arc(o → p) crosses the
@@ -1200,6 +1057,14 @@ class SimplePolygon:
         n = len(self.vertices)
         if n < 3:
             raise ValueError("polygon needs >= 3 vertices")
+        for i in range(n):  # O(n²), driver-side: rings are small
+            for j in range(i + 2, n - (i == 0)):
+                if simple_crossing(self.vertices[i],
+                                   self.vertices[(i + 1) % n],
+                                   self.vertices[j],
+                                   self.vertices[(j + 1) % n]):
+                    raise ValueError(f"polygon edges {i} and {j} cross; "
+                                     "the ring is not simple")
         cx = sum(v[0] for v in self.vertices)
         cy = sum(v[1] for v in self.vertices)
         cz = sum(v[2] for v in self.vertices)

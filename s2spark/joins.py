@@ -164,14 +164,10 @@ def verify_matches(lat: np.ndarray, lng: np.ndarray,
             ok[m] = RK.cap_contains(lat[m], lng[m], *params)
         elif kind == "rect":
             ok[m] = RK.rect_contains(lat[m], lng[m], *params)
-        elif kind == "star":
-            ok[m] = RK.starpoly_contains(lat[m], lng[m], params)
         elif kind == "spoly":
             ok[m] = RK.simplepoly_contains(lat[m], lng[m], params)
         else:
-            normals = [tuple(params[i:i + 3])
-                       for i in range(0, len(params), 3)]
-            ok[m] = RK.poly_contains(lat[m], lng[m], normals)
+            raise ValueError(f"region {int(rid)}: unknown kind {kind!r}")
     return ok
 
 
@@ -204,6 +200,21 @@ def make_verify_udf(params_by_region: dict[int, tuple[str, list[float]]],
 # variant (a): broadcast interval-stab join (zero shuffle)
 # ---------------------------------------------------------------------------
 
+def _stab_hits(lat: np.ndarray, lng: np.ndarray, index: RK.IntervalIndex,
+               params_by_region: dict[int, tuple[str, list[float]]]):
+    """encode + interval stab + exact verify over one batch: the leaf
+    ids, and the (row, region_id) pairs whose containment holds."""
+    leaf = hilbert.lat_lng_to_cell_id(lat, lng)
+    rows, rids, interior = index.stab(sortable(leaf))
+    keep = interior.copy()
+    boundary = ~interior
+    if boundary.any():
+        keep[boundary] = verify_matches(
+            lat[rows[boundary]], lng[rows[boundary]],
+            rids[boundary], params_by_region)
+    return leaf, rows[keep], rids[keep]
+
+
 def pip_join_broadcast(points: DataFrame,
                        covering_rows: list[tuple],
                        params_by_region: dict[int, tuple[str, list[float]]],
@@ -233,17 +244,9 @@ def pip_join_broadcast(points: DataFrame,
         for pdf in batches:
             lat = pdf["lat"].to_numpy(np.float64)
             lng = pdf["lng"].to_numpy(np.float64)
-            leaf = hilbert.lat_lng_to_cell_id(lat, lng)
-            rows, rids, interior = index.stab(sortable(leaf))
+            leaf, rows, rids = _stab_hits(lat, lng, index, params_by_region)
             if len(rids) == 0:
                 continue
-            keep = interior.copy()
-            boundary = ~interior
-            if boundary.any():
-                keep[boundary] = verify_matches(
-                    lat[rows[boundary]], lng[rows[boundary]],
-                    rids[boundary], params_by_region)
-            rows, rids = rows[keep], rids[keep]
             out = {"region_id": rids,
                    "point_id": pdf["point_id"].to_numpy(np.int64)[rows]}
             for c in extra_cols:
@@ -318,13 +321,25 @@ def pip_join(points: DataFrame, covering_rows: list[tuple],
                              broadcast_covering=False)
 
 
-def pip_semi(points: DataFrame, covering_rows, params_by_region,
-             negate: bool = False) -> DataFrame:
-    """LEFT SEMI / ANTI forms: points in (not in) ANY region."""
-    matches = pip_join_broadcast(points, covering_rows, params_by_region) \
-        .select("point_id").distinct()
-    how = "left_anti" if negate else "left_semi"
-    return points.join(matches, "point_id", how)
+def pip_anti(points: DataFrame, covering_rows: list[tuple],
+             params_by_region: dict[int, tuple[str, list[float]]]
+             ) -> DataFrame:
+    """LEFT ANTI form: the rows of ``points`` contained in NO region.
+    One ``mapInPandas`` pass (the stab of :func:`pip_join_broadcast`)
+    that keeps each input row with no verified hit, so every row is
+    judged on its own coordinates, even when rows share a point_id."""
+    index = build_interval_index(covering_rows)
+
+    def _map(batches):
+        for pdf in batches:
+            _, rows, _ = _stab_hits(pdf["lat"].to_numpy(np.float64),
+                                    pdf["lng"].to_numpy(np.float64),
+                                    index, params_by_region)
+            miss = np.ones(len(pdf), dtype=bool)
+            miss[rows] = False
+            yield pdf[miss]
+
+    return points.mapInPandas(_map, points.schema)
 
 
 def cell_containment_join(cells: DataFrame, container: DataFrame,

@@ -52,17 +52,6 @@ def rect_contains(lat_deg, lng_deg, lat_lo: float, lat_hi: float,
     return lat_ok & (lngn >= lng_lo) & (lngn <= lng_hi)
 
 
-def poly_contains(lat_deg, lng_deg, edge_normals) -> np.ndarray:
-    """convex polygon: p is inside iff every edge normal has p on its
-    non-negative side. ``edge_normals`` is a list of (ex, ey, ez)
-    python-float tuples precomputed as cross(v_i, v_{i+1})."""
-    x, y, z = latlng_to_xyz_oracle(np.asarray(lat_deg), np.asarray(lng_deg))
-    out = np.ones(x.shape, dtype=bool)
-    for ex, ey, ez in edge_normals:
-        out &= (ex * x + ey * y + ez * z) >= 0.0
-    return out
-
-
 def simplepoly_contains(lat_deg, lng_deg, params) -> np.ndarray:
     """general SIMPLE polygon (may be concave, non-star) via crossing
     parity: p is inside iff the great-circle arc from a fixed
@@ -172,18 +161,3 @@ def _ramp(counts: np.ndarray) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     ends = np.cumsum(counts)
     return np.arange(total, dtype=np.int64) - np.repeat(ends - counts, counts)
-
-def starpoly_contains(lat_deg, lng_deg, tri_normals) -> np.ndarray:
-    """star-shaped polygon via fan-triangle decomposition: inside iff
-    some triangle (kernel, v_i, v_{i+1}) contains p — 3 sign tests per
-    triangle, OR across triangles (identical formula in the oracle
-    SQL). ``tri_normals`` is a flat list of 9 floats per triangle."""
-    x, y, z = latlng_to_xyz_oracle(np.asarray(lat_deg), np.asarray(lng_deg))
-    out = np.zeros(x.shape, dtype=bool)
-    for t in range(0, len(tri_normals), 9):
-        e = tri_normals[t:t + 9]
-        m = ((e[0] * x + e[1] * y + e[2] * z) >= 0.0) \
-            & ((e[3] * x + e[4] * y + e[5] * z) >= 0.0) \
-            & ((e[6] * x + e[7] * y + e[8] * z) >= 0.0)
-        out |= m
-    return out

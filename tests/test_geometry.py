@@ -14,7 +14,7 @@ from s2spark.geometry import (
     LatLngRect,
     R1Interval,
     S1Interval,
-    SphericalPolygon,
+    SimplePolygon,
     cid_all_neighbors,
     cid_children,
     cid_from_face,
@@ -72,7 +72,7 @@ def test_covering_properties(kind):
         region = LatLngRect.from_degrees(39, 8, 41, 12)
         lo, hi = (37, 43), (6, 14)
     else:
-        region = SphericalPolygon([(38, 8), (38, 12), (42, 12), (42, 8)])
+        region = SimplePolygon([(38, 8), (38, 12), (42, 12), (42, 8)])
         lo, hi = (36, 44), (6, 14)
     r = RegionCoverer()
     cov = r.get_covering(region)
@@ -208,11 +208,11 @@ def test_rect_laws():
 
 
 def test_polygon_extension():
-    poly = SphericalPolygon([(0, 0), (0, 10), (10, 10), (10, 0)])
+    poly = SimplePolygon([(0, 0), (0, 10), (10, 10), (10, 0)])
     assert poly.contains_latlng(5, 5)
     assert not poly.contains_latlng(15, 5)
     with pytest.raises(ValueError):
-        SphericalPolygon([(0, 0), (10, 10), (0, 10), (10, 0)])  # non-convex order
+        SimplePolygon([(0, 0), (10, 10), (0, 10), (10, 0)])  # a bowtie
 
 
 def test_flood_fill_covering():
@@ -242,16 +242,20 @@ def test_face_cells_partition_sphere():
 
 def test_simple_polygon_concave():
     """general simple polygon (SURVEY §1.1 row 12): the U-shape
-    fixture is concave and NOT star-shaped; winding parity classifies
+    fixture is concave and NOT star-shaped; crossing parity classifies
     arms/notch/outside correctly and agrees with the vectorized
     kernel and the scalar form everywhere."""
-    from s2spark.fixtures import SPOLYS
-    from s2spark.geometry import SimplePolygon, StarPolygon
+    from s2spark.fixtures import POLYS, U_POLY
+    from s2spark.geometry import cross, dot, latlng_to_point, normalize
     from s2spark.kernels import regions as RK
 
-    verts = SPOLYS[0][1]
-    with pytest.raises(ValueError):
-        StarPolygon(verts)  # proves the fixture is genuinely non-star
+    verts = dict(POLYS)[U_POLY]
+    # genuinely non-star: some edge does not see the centroid on its
+    # left, so the centroid fan of triangles does not tile the ring
+    pts = [latlng_to_point(la, ln) for la, ln in verts]
+    c = normalize(tuple(sum(v[i] for v in pts) for i in range(3)))
+    assert any(dot(cross(a, b), c) <= 0
+               for a, b in zip(pts, pts[1:] + pts[:1]))
     p = SimplePolygon(verts)
     assert p.contains_latlng(-16.0, -49.0)      # left arm
     assert p.contains_latlng(-16.0, -44.8)      # right arm
@@ -271,10 +275,9 @@ def test_simple_polygon_covering():
     """coverer consumes the SimplePolygon region interface: every
     contained sample point falls in the covering; interior covering
     cells are fully contained."""
-    from s2spark.fixtures import SPOLYS
-    from s2spark.geometry import SimplePolygon
+    from s2spark.fixtures import POLYS, U_POLY
 
-    p = SimplePolygon(SPOLYS[0][1])
+    p = SimplePolygon(dict(POLYS)[U_POLY])
     cov = RegionCoverer(max_cells=64).get_covering(p)
     lat = RNG.uniform(-23, -13, 2000)
     lng = RNG.uniform(-51, -43, 2000)

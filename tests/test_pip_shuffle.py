@@ -1,7 +1,8 @@
 """The PIP shuffle arm: the bucket join as a sort-merge join whose hot
 bucket partitions AQE's skew-join rule splits, and the router that
 picks it over the map-side stab only when the covering is too big.
-Every arm must return the stab's rows."""
+Every arm must return the stab's rows. Also the anti form, which runs
+the same stab, and the verify stage's region kinds."""
 
 import numpy as np
 import pandas as pd
@@ -100,3 +101,21 @@ def test_router_arms(spark, sf_dir, pieces, monkeypatch):
     got = _rows(merge)
     assert "SortMergeJoin" in _final_plan(merge)
     assert ref and got == ref
+
+
+def test_pip_anti_judges_rows_not_ids(spark, pieces):
+    """two rows share a point_id: one inside cap 1 (NYC), one far from
+    every region. The anti form keeps the far row."""
+    cov_rows, params = pieces
+    pts = spark.createDataFrame(
+        [(7, 40.7128, -74.006), (7, -40.0, 100.0)],
+        "point_id long, lat double, lng double")
+    assert _rows(J.pip_anti(pts, cov_rows, params)) == [(7, -40.0, 100.0)]
+
+
+def test_verify_matches_rejects_unknown_kind():
+    lat = np.array([10.0])
+    lng = np.array([20.0])
+    params = {99: ("triangle", [0.0] * 9)}
+    with pytest.raises(ValueError, match="region 99.*'triangle'"):
+        J.verify_matches(lat, lng, np.array([99]), params)

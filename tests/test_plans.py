@@ -48,6 +48,18 @@ def test_mapside_join_has_no_shuffle(spark, sf_dir, pieces):
     assert "Exchange" not in _plan(df)
 
 
+def test_pip_anti_is_one_map_pass(spark, sf_dir, pieces):
+    """the anti form filters rows inside the stab's mapInPandas: no
+    join back to the points and no shuffle."""
+    cov_rows, params = pieces
+    df = J.pip_anti(FX.points_df(spark, sf_dir), cov_rows, params)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert sum("MapInPandas" in ln for ln in plan.splitlines()) == 1
+    assert "Join" not in plan
+    assert "Exchange" not in plan
+
+
 def test_raster_vector_align_single_python_pass(spark, sf_dir, pieces):
     """the flagship runs encode + stab + verify in ONE map-side Python
     pass: no scalar-UDF eval, no hash join against a covering table,

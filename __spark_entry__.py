@@ -669,44 +669,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # The driver certifies the FIRST 50 keys, so the window leads
         # with the keys whose code path changed last, then the keys
         # left outside the last window, then the rest.
-        # --- verify params or oracle SQL changed: one polygon type,
-        # pip_anti through the stab pass, the shared region arms ---
+        # --- the stab pass behind the grid prefilter ---
+        "raster_vector": _q_raster_vector,
         "pip_broadcast": _q_pip_broadcast,
-        "pip_bucketed": _q_pip_bucketed,
-        "pip_salted": _q_pip_salted,
         "pip_planned": _q_pip_planned,
         "pip_polygon": _q_pip_polygon,
         "pip_buffered": _q_pip_buffered,
         "pip_anti": _q_pip_anti,
-        "region_stats": _q_region_stats,
-        "raster_vector": _q_raster_vector,
         "image_pip": _q_image_pip,
-        # --- outside the last window ---
+        "region_stats": _q_region_stats,
+        # --- cell tokens without ICU lower ---
+        "tile_assign": _q_tile_assign,
+        "cell_algebra": _q_cell_algebra,
+        "tile_rollup": _q_tile_rollup,
+        "tile_rollup_sketch": _q_tile_rollup_sketch,
+        "tile_rollup_sketch_exact": _q_tile_rollup_sketch_exact,
+        "tile_enumerate": _q_tile_enumerate,
+        "neighbors": _q_neighbors,
+        "vertex_neighbors": _q_vertex_neighbors,
+        "token_roundtrip": _q_knn_tokens,
+        "top_tiles": _q_top_tiles,
+        "image_tile_stats_exact": _q_image_tile_stats_exact,
+        "image_tile_stats": _q_image_tile_stats,
+        # --- the other PIP arms, then the last window's tail ---
+        "pip_bucketed": _q_pip_bucketed,
+        "pip_salted": _q_pip_salted,
         "token_quantiles": T.token_quantiles,
         "knn_many": _q_knn_many,
         "cell_children": _q_cell_children,
         "simhash": T.simhash,
-        "tile_rollup": _q_tile_rollup,
-        "image_tile_stats_exact": _q_image_tile_stats_exact,
         "pricing_summary": _q_pricing_summary,
         "tile_setops": _q_tile_setops,
         "top_customers": _q_top_customers,
-        "top_tiles": _q_top_tiles,
         "fingerprint": T.fingerprint,
         "lang_id": T.lang_id,
-        "neighbors": _q_neighbors,
         "pii_scan": T.pii_scan,
         "stratified_sample": T.stratified_sample,
-        "tile_enumerate": _q_tile_enumerate,
         "token_count": T.token_count,
-        "token_roundtrip": _q_knn_tokens,
-        "vertex_neighbors": _q_vertex_neighbors,
         "decontaminate": T.decontaminate,
         "repetition_ratio": T.repetition_ratio,
         "pq_codes": A.pq_codes,
         "image_verify": _q_image_verify,
         "image_resize": _q_image_resize,
-        "image_tile_stats": _q_image_tile_stats,
         # --- earlier order ---
         "ann_ivf_buckets": A.ivf_buckets,
         "ann_ivf": A.ann_ivf_topk,
@@ -732,14 +736,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_dedup": _q_multimodal_dedup,
         "audio_features": _q_audio_features,
         "video_frames": _q_video_frames,
-        "tile_rollup_sketch": _q_tile_rollup_sketch,
-        "tile_rollup_sketch_exact": _q_tile_rollup_sketch_exact,
         "cellunion_intersect": _q_cellunion_intersect,
         "distance_join": _q_distance_join,
         "knn": _q_knn,
         "event_pairs": _q_event_pairs,
-        "tile_assign": _q_tile_assign,
-        "cell_algebra": _q_cell_algebra,
         "source_stats": T.source_stats,
         "event_props": _q_event_props,
         "nation_revenue": _q_nation_revenue,

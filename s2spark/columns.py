@@ -230,9 +230,12 @@ def advance_wrap(cell_id: Column | str, n: Column | int,
 
 def token(cell_id: Column | str) -> Column:
     """``CellId.to_token``: 16-digit lowercase hex, trailing zeros
-    stripped ('X' for the sentinel id 0)."""
+    stripped ('X' for the sentinel id 0). ``hex`` emits [0-9A-F] only,
+    so a ``translate`` lowercases it: Spark 4's ``lower`` goes through
+    ICU case mapping, which made the flagship's final aggregate several
+    times slower in a fresh JVM."""
     cid = _c(cell_id)
-    hx = F.lower(F.lpad(F.hex(cid), 16, "0"))
+    hx = F.translate(F.lpad(F.hex(cid), 16, "0"), "ABCDEF", "abcdef")
     return F.when(cid == F.lit(0), F.lit("X")) \
         .otherwise(F.regexp_replace(hx, "0+$", ""))
 

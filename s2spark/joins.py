@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -55,7 +56,7 @@ from s2spark.geometry import (
     cid_range_max,
     cid_range_min,
 )
-from s2spark.kernels import hilbert
+from s2spark.kernels import cellops, hilbert
 from s2spark.kernels import regions as RK
 from s2spark.kernels.cellops import sortable, sortable_int
 
@@ -64,6 +65,14 @@ BUCKET_LEVEL = 8  # cell-id prefix level both bucket-join sides key on
 # above this many covering rows (the stab index's size) the router
 # leaves the map-side stab for the sort-merge bucket join
 BROADCAST_COVERING_LIMIT = 5_000_000
+# a point's 1° grid key (kernels.regions.covering_grid_keys): NULL for
+# a null or NaN coordinate, -1 (always kept) off the lat/lng grid
+GRID_KEY_SQL = (
+    "CASE WHEN lat IS NULL OR lng IS NULL OR isnan(lat) OR isnan(lng) "
+    "THEN NULL "
+    "WHEN lat < -90.0 OR lat > 90.0 OR lng < -180.0 OR lng > 180.0 THEN -1 "
+    f"ELSE CAST(LEAST(FLOOR(lat + 90.0), {RK.GRID_ROWS - 1}) * {RK.GRID_COLS}"
+    f" + LEAST(FLOOR(lng + 180.0), {RK.GRID_COLS - 1}) AS INT) END")
 
 
 # ---------------------------------------------------------------------------
@@ -88,13 +97,19 @@ def compute_coverings(regions: dict[int, object],
     return rows
 
 
+def _covering_cells(covering_rows: list[tuple]) -> np.ndarray:
+    """the rows' cell ids (uint64 or their signed view) as uint64."""
+    cids = np.array([cid for _, cid, _ in covering_rows], dtype=object)
+    return (cids & ((1 << 64) - 1)).astype(np.uint64)
+
+
 def build_interval_index(covering_rows: list[tuple]) -> RK.IntervalIndex:
     """covering rows -> CSR stabbing index over sortable leaf ranges."""
-    starts = [sortable_int(cid_range_min(cid)) for _, cid, _ in covering_rows]
-    ends = [sortable_int(cid_range_max(cid)) for _, cid, _ in covering_rows]
-    rids = [rid for rid, _, _ in covering_rows]
-    interior = [i for _, _, i in covering_rows]
-    return RK.IntervalIndex(starts, ends, rids, interior)
+    cid = _covering_cells(covering_rows)
+    return RK.IntervalIndex(sortable(cellops.range_min(cid)),
+                            sortable(cellops.range_max(cid)),
+                            [rid for rid, _, _ in covering_rows],
+                            [i for _, _, i in covering_rows])
 
 
 _COVDF_CACHE: dict = {}
@@ -203,9 +218,14 @@ def make_verify_udf(params_by_region: dict[int, tuple[str, list[float]]],
 def _stab_hits(lat: np.ndarray, lng: np.ndarray, index: RK.IntervalIndex,
                params_by_region: dict[int, tuple[str, list[float]]]):
     """encode + interval stab + exact verify over one batch: the leaf
-    ids, and the (row, region_id) pairs whose containment holds."""
+    ids, and the (row, region_id) pairs whose containment holds. A row
+    with a non-finite coordinate is in no region."""
     leaf = hilbert.lat_lng_to_cell_id(lat, lng)
     rows, rids, interior = index.stab(sortable(leaf))
+    finite = np.isfinite(lat) & np.isfinite(lng)
+    if not finite.all():  # a NaN encodes to a real leaf: mask its hits
+        hit = finite[rows]
+        rows, rids, interior = rows[hit], rids[hit], interior[hit]
     keep = interior.copy()
     boundary = ~interior
     if boundary.any():
@@ -230,7 +250,8 @@ def pip_join_broadcast(points: DataFrame,
     flagship's 3,319-cell covering), so the covering side is bounded by
     driver memory and task size. ``emit_cell_id`` passes the leaf id
     computed in-kernel through, so downstream tiling needs no second
-    encode pass.
+    encode pass. A broadcast 1° grid semi-join (:func:`_near_covering`)
+    ahead of the pass keeps only the points near some covering cell.
     """
     index = build_interval_index(covering_rows)
     fields = ([StructField("region_id", LongType()),
@@ -255,7 +276,21 @@ def pip_join_broadcast(points: DataFrame,
                 out["cell_id"] = leaf.view(np.int64)[rows]
             yield pd.DataFrame(out)
 
-    return points.mapInPandas(_map, out_schema)
+    return _near_covering(points, covering_rows) \
+        .mapInPandas(_map, out_schema)
+
+
+def _near_covering(points: DataFrame,
+                   covering_rows: list[tuple]) -> DataFrame:
+    """the rows of ``points`` whose 1° grid square touches some covering
+    cell's lat/lng bound, or whose coordinates lie off the grid: a
+    broadcast left-semi join on an int key that runs in the scan's
+    codegen stage, so the rows no covering cell is near never cross
+    into Python. It drops only rows the stab would emit nothing for."""
+    keys = RK.covering_grid_keys(_covering_cells(covering_rows))
+    grid = points.sparkSession.createDataFrame(pa.table({"_grid_key": keys}))
+    return points.join(F.broadcast(grid),
+                       F.expr(GRID_KEY_SQL) == grid["_grid_key"], "left_semi")
 
 
 # ---------------------------------------------------------------------------

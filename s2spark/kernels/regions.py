@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from s2spark.kernels import cellops
+
 DEG = 0.017453292519943295  # pi / 180, inlined identically in oracle SQL
 
 
@@ -116,26 +118,17 @@ class IntervalIndex:
         nseg = len(bounds) - 1
         lo = np.searchsorted(bounds, starts, side="left")
         hi = np.searchsorted(bounds, ends + 1, side="left")  # exclusive
-        counts = np.zeros(nseg + 1, dtype=np.int64)
-        np.add.at(counts, lo, 1)
-        np.subtract.at(counts, hi, 1)
-        span_counts = np.cumsum(counts[:-1])  # intervals covering each seg
-        seg_off = np.zeros(nseg + 1, dtype=np.int64)
-        seg_off[1:] = np.cumsum(span_counts)
-        seg_region = np.empty(seg_off[-1], dtype=np.int64)
-        seg_interior = np.empty(seg_off[-1], dtype=bool)
-        cursor = seg_off[:-1].copy()
-        order = np.argsort(lo, kind="stable")
-        for idx in order:
-            s, e = lo[idx], hi[idx]
-            pos = cursor[s:e]
-            seg_region[pos] = region_ids[idx]
-            seg_interior[pos] = interior[idx]
-            cursor[s:e] += 1
+        # one entry per (interval, covered segment); within a segment
+        # the entries run in (lo, interval index) order
+        span = hi - lo
+        idx = np.repeat(np.arange(len(lo)), span)
+        seg = np.repeat(lo, span) + _ramp(span)
+        idx = idx[np.lexsort((idx, lo[idx], seg))]
         self.bounds = bounds
-        self.seg_off = seg_off
-        self.seg_region = seg_region
-        self.seg_interior = seg_interior
+        self.seg_off = np.zeros(nseg + 1, dtype=np.int64)
+        self.seg_off[1:] = np.cumsum(np.bincount(seg, minlength=nseg))
+        self.seg_region = region_ids[idx]
+        self.seg_interior = interior[idx]
 
     def stab(self, ids_sortable: np.ndarray):
         """ids (sortable int64) -> (row_idx, region_id, interior):
@@ -152,6 +145,60 @@ class IntervalIndex:
             return (row_idx, np.empty(0, np.int64), np.empty(0, bool))
         offsets = np.repeat(start, cnt) + _ramp(cnt)
         return row_idx, self.seg_region[offsets], self.seg_interior[offsets]
+
+
+# 1° lat/lng squares, key = row * GRID_COLS + col (row from lat + 90,
+# col from lng + 180); the key -1 stands for coordinates off the grid
+GRID_ROWS = 180
+GRID_COLS = 360
+GRID_PAD_DEG = 1e-9  # bound padding, far above the vertex rounding
+
+
+def cell_latlng_bounds(cell_ids: np.ndarray):
+    """padded (lat_lo, lat_hi, lng_lo, lng_hi) degree bounds of each
+    cell, ``lng_lo <= lng_hi`` with ``lng_hi`` past 180 where the bound
+    wraps and ``lng_hi - lng_lo >= 360`` for every longitude.
+
+    The rule of ``Cell.get_rect_bound``: above level 0 the latitude
+    and longitude extremes lie at the vertices (longitude: the
+    shortest arc holding all four), and a cell that reaches a pole
+    spans every longitude; a level-0 face gets the whole sphere."""
+    cid = np.asarray(cell_ids, dtype=np.uint64)
+    v = cellops.cell_vertices_xyz(cid)
+    x, y, z = v[..., 0], v[..., 1], v[..., 2]
+    lat = np.degrees(np.arctan2(z, np.hypot(x, y)))
+    lng = np.sort(np.degrees(np.arctan2(y, x)), axis=1)
+    # the shortest arc holding the 4 longitudes skips the widest gap
+    gap = np.diff(np.concatenate([lng, lng[:, :1] + 360.0], axis=1), axis=1)
+    lng_lo = lng[np.arange(len(cid)), (gap.argmax(axis=1) + 1) % 4]
+    lng_hi = lng_lo + (360.0 - gap.max(axis=1))
+    face = cellops.level(cid) == 0
+    lat_lo = np.where(face, -90.0, lat.min(axis=1) - GRID_PAD_DEG)
+    lat_hi = np.where(face, 90.0, lat.max(axis=1) + GRID_PAD_DEG)
+    full = (lat_lo <= -90.0) | (lat_hi >= 90.0)
+    return (lat_lo, lat_hi,
+            np.where(full, -180.0, lng_lo - GRID_PAD_DEG),
+            np.where(full, 180.0, lng_hi + GRID_PAD_DEG))
+
+
+def covering_grid_keys(cell_ids: np.ndarray) -> np.ndarray:
+    """sorted int32 keys of the 1° squares that some cell's
+    :func:`cell_latlng_bounds` touches, plus -1. Squares are found
+    with the point key's own ``floor(x + c)`` in float64, so a point
+    inside a cell always gets a key enumerated here."""
+    lat_lo, lat_hi, lng_lo, lng_hi = cell_latlng_bounds(cell_ids)
+    r0 = np.clip(np.floor(lat_lo + 90.0), 0, GRID_ROWS - 1).astype(np.int64)
+    r1 = np.clip(np.floor(lat_hi + 90.0), 0, GRID_ROWS - 1).astype(np.int64)
+    c0 = np.floor(lng_lo + 180.0).astype(np.int64)
+    ncol = np.minimum(np.floor(lng_hi + 180.0).astype(np.int64) - c0 + 1,
+                      GRID_COLS)
+    n = (r1 - r0 + 1) * ncol
+    cell = np.repeat(np.arange(len(n)), n)
+    k = _ramp(n)
+    row = r0[cell] + k // ncol[cell]
+    col = (c0[cell] + k % ncol[cell]) % GRID_COLS
+    return np.unique(np.concatenate([[-1], row * GRID_COLS + col])) \
+        .astype(np.int32)
 
 
 def _ramp(counts: np.ndarray) -> np.ndarray:

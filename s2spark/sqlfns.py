@@ -49,7 +49,8 @@ _FNS: dict[str, tuple[str, str, str]] = {
                       f" AND (((a + ((a & -a) - 1)) ^ {_I64_MIN}) >= ((b - (b & -b) + 1) ^ {_I64_MIN}))"),
     "s2_token": ("c BIGINT", "STRING",
                  "CASE WHEN c = 0 THEN 'X' ELSE "
-                 "regexp_replace(lower(lpad(hex(c), 16, '0')), '0+$', '')"
+                 "regexp_replace(translate(lpad(hex(c), 16, '0'),"
+                 " 'ABCDEF', 'abcdef'), '0+$', '')"
                  " END"),
 }
 

@@ -20,6 +20,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _shuffles(plan: str) -> list[str]:
+    """the plan's shuffle Exchange lines (a BroadcastExchange is not a
+    shuffle)."""
+    return [ln for ln in plan.splitlines()
+            if "Exchange" in ln and "BroadcastExchange" not in ln]
+
+
 def test_bucketed_join_is_broadcast_hash(spark, sf_dir, pieces):
     cov_rows, params = pieces
     cov_df = J.coverings_df(spark, cov_rows, bucket_level=8)
@@ -42,10 +49,11 @@ def test_bucketed_join_single_encode_pass(spark, sf_dir, pieces):
 
 def test_mapside_join_has_no_shuffle(spark, sf_dir, pieces):
     """the interval-stab variant is a pure map-side pass — zero
-    Exchange nodes before the output."""
+    shuffle Exchange nodes before the output (the grid keys' broadcast
+    is not a shuffle)."""
     cov_rows, params = pieces
     df = J.pip_join_broadcast(FX.points_df(spark, sf_dir), cov_rows, params)
-    assert "Exchange" not in _plan(df)
+    assert _shuffles(_plan(df)) == []
 
 
 def test_pip_anti_is_one_map_pass(spark, sf_dir, pieces):
@@ -62,20 +70,32 @@ def test_pip_anti_is_one_map_pass(spark, sf_dir, pieces):
 
 def test_raster_vector_align_single_python_pass(spark, sf_dir, pieces):
     """the flagship runs encode + stab + verify in ONE map-side Python
-    pass: no scalar-UDF eval, no hash join against a covering table,
-    and the group-by's hash exchange is the only shuffle."""
+    pass: no scalar-UDF eval, no join against a covering table, and
+    the group-by's hash exchange is the only shuffle. The one join is
+    the grid prefilter: a broadcast left-semi join below the Python
+    pass whose build side is the local table of grid keys."""
     cov_rows, params = pieces
     df = J.raster_vector_align(FX.points_df(spark, sf_dir), cov_rows,
                                params, level=8)
     plan = _plan(df)
     lines = plan.splitlines()
-    assert sum("MapInPandas" in ln or "MapInArrow" in ln
-               for ln in lines) == 1
-    for bad in ("ArrowEvalPython", "BatchEvalPython", "BroadcastHashJoin"):
+    python = [i for i, ln in enumerate(lines)
+              if "MapInPandas" in ln or "MapInArrow" in ln]
+    assert len(python) == 1
+    for bad in ("ArrowEvalPython", "BatchEvalPython", "range_min_s",
+                "bucket#"):
         assert bad not in plan
-    exchanges = [ln for ln in lines if "Exchange" in ln]
-    assert len(exchanges) == 1
-    assert "Exchange hashpartitioning(region_id" in exchanges[0]
+    joins = [i for i, ln in enumerate(lines) if "Join" in ln]
+    assert len(joins) == 1
+    semi = joins[0]
+    assert "BroadcastHashJoin" in lines[semi] and "LeftSemi" in lines[semi]
+    assert semi > python[0]
+    build = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(build) == 1 and build[0] > semi
+    assert "LocalTableScan [_grid_key#" in lines[build[0] + 1]
+    shuffles = _shuffles(plan)
+    assert len(shuffles) == 1
+    assert "Exchange hashpartitioning(region_id" in shuffles[0]
 
 
 def test_tile_path_is_whole_stage_codegen(spark, sf_dir):
